@@ -27,15 +27,15 @@ object DevLife {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
     val taskNs = new java.util.concurrent.atomic.AtomicLong
-    val sites = new java.util.concurrent.ConcurrentHashMap[String,
+    val sites = scala.collection.concurrent.TrieMap[String,
       java.util.concurrent.atomic.AtomicInteger]()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           jobs.incrementAndGet()
           val site = j.stageInfos.lastOption.map(_.name).getOrElse("?")
-          sites.computeIfAbsent(site,
-            _ => new java.util.concurrent.atomic.AtomicInteger)
+          sites.getOrElseUpdate(site,
+            new java.util.concurrent.atomic.AtomicInteger)
             .incrementAndGet(): Unit
         }
         override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -54,11 +54,10 @@ object DevLife {
       r
     }
     import graft.ops.{CurationNDay, MultiDay}
-    which match {
+    val root = graft.core.Fixtures.tempIndexDir("graft_devlife_")
+    try which match {
       case "cap4" =>
-        val root = graft.queries.Curation2.tempIndexDir("graft_devlife_")
         val p = MultiDay.Paths4(root)
-        sys.addShutdownHook(graft.queries.Curation2.deleteDir(root))
         val fetch = graft.core.Tables(spark, dir, "documents")
         t("bootstrap4") { MultiDay.bootstrap4(spark, dir, p) }
         t("day1") { MultiDay.processDay4(spark, p, 1,
@@ -73,19 +72,14 @@ object DevLife {
         t("cap3") { MultiDay.cap4Day(spark, p, "cap3",
           MultiDay.retainedMasses(spark, p, fetch).values.sum, fetch) }
       case "cur" =>
-        val root = graft.queries.Curation2.tempIndexDir("graft_devlife_")
         val a = graft.ops.CurationDay.Artifacts(root)
-        sys.addShutdownHook(graft.queries.Curation2.deleteDir(root))
         t("runDaysBatch") { CurationNDay.runDaysBatch(spark, dir, a) }
       case "mm6" =>
-        val root = graft.queries.Curation2.tempIndexDir("graft_devlife_")
         val p = MultiDay.Paths4(root)
-        sys.addShutdownHook(graft.queries.Curation2.deleteDir(root))
         t("runDays6Batch") { MultiDay.runDays6Batch(spark, dir, p) }
       case other => sys.error(s"DevLife: unknown mode $other")
-    }
-    import scala.jdk.CollectionConverters._
-    sites.asScala.toSeq.sortBy(-_._2.get).take(40).foreach { case (s, n) =>
+    } finally graft.core.Fixtures.deleteDir(root)
+    sites.toSeq.sortBy(-_._2.get).take(40).foreach { case (s, n) =>
       println(f"[site] ${n.get}%4d  $s") }
     spark.stop()
   }

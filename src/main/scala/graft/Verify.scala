@@ -38,7 +38,7 @@ object Verify {
     // are partitioning-invariant; no rand(); the only persist is
     // MultiOutput's script-scoped one, released in its own finally), so
     // concurrency cannot change any output. Shared lifecycle fixtures
-    // serialize on their ConcurrentHashMap.computeIfAbsent builders.
+    // are built once in graft.core.Fixtures; their callers wait for it.
     // SPARK_GRAFT_VERIFY_PAR=1 restores the sequential path.
     val par = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt)
     def run1(name: String,
@@ -56,15 +56,6 @@ object Verify {
       // already unpersists its shared subplans in its own finally.
       if (par == 1) spark.catalog.clearCache()
     }
-    if (par == 1) gate.foreach { case (n, f) => run1(n, f) }
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      try {
-        gate.map { case (n, f) =>
-          pool.submit(new Runnable { def run(): Unit = run1(n, f) })
-        }.foreach(_.get())
-      } finally { pool.shutdownNow(): Unit }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -77,6 +68,23 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // The selected names, written first: tools/check.py counts a name
+    // with no output as a failure instead of never seeing it.
+    Files.writeString(Paths.get(s"$outDir/declared.json"),
+      gate.map { case (n, _) => q(n) }.mkString("[", ",", "]"))
+    try {
+      if (par == 1) gate.foreach { case (n, f) => run1(n, f) }
+      else {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+        try {
+          gate.map { case (n, f) =>
+            pool.submit(new Runnable { def run(): Unit = run1(n, f) })
+          }.foreach(_.get())
+        } finally { pool.shutdownNow(): Unit }
+      }
+    } finally graft.core.Fixtures.release(spark).foreach { case (n, d, sec) =>
+      System.err.println(f"[verify] fixture $n%s $d%s built in $sec%.1f s")
+    }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -10,7 +10,9 @@ package graft.core
   *
   * Used only for actions with NO data dependency and disjoint output
   * paths (different index artifacts); results are unchanged by
-  * construction. Rethrows the first failure after cancelling the rest.
+  * construction. A failure is rethrown only after every branch has
+  * finished, so a caller that cleans up on failure (a failed fixture
+  * build deleting its roots) never races a sibling's writes.
   */
 object Par {
   def run(fs: (() => Unit)*): Unit = {
@@ -22,13 +24,14 @@ object Par {
           def call(): Unit = f()
         })
       }
-      futs.foreach { fut =>
-        try fut.get()
+      val failures = futs.flatMap { fut =>
+        try { fut.get(); None }
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+            Some(e.getCause)
         }
       }
+      failures.headOption.foreach(throw _)
     } finally { pool.shutdownNow(): Unit }
   }
 }

@@ -55,7 +55,8 @@ object PxlRunner {
       metaFns: Set[String] = Set.empty,
       meta: (DataFrame, String, String, String) => DataFrame =
         (_, fn, _, _) => throw new PxlError(s"metadata fn $fn: no resolver bound"),
-      modules: Map[String, String] = Map.empty,
+      /** Importable module sources, each read only when imported. */
+      modules: Map[String, () => String] = Map.empty,
       sketchQuantiles: Boolean = false,
       /** UDTF sources (`px.GetAgentStatus()` style): name + stringified
         * args -> relation. Bound to graft.sources.CatalogUdtfs.
@@ -969,7 +970,7 @@ object PxlRunner {
         val modScope = mutable.LinkedHashMap[String, V]()
         val saved = scopes
         scopes = List(modScope)
-        try execStmts(PxlParser.parse(env.modules(m)))
+        try execStmts(PxlParser.parse(env.modules(m)()))
         finally scopes = saved
         moduleScope(m) = VModule(modScope)
       case ImportS(m) => throw new PxlError(s"unknown module $m")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.ops.{Corpus, Dedup, Similarity}
 import Q._
 
@@ -38,7 +39,7 @@ object Curation {
       val docs = t(s, dir, "documents")
       val corpus = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
       val batch = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
-      val idx = Curation2.tempIndexDir("graft_dedup_index_")
+      val idx = Fixtures.tempIndexDir("graft_dedup_index_")
       // build inside the try; materialize before deleting the on-disk
       // index (leak fixes, r8)
       try {
@@ -48,7 +49,7 @@ object Curation {
             NGRAM, K, BANDS, 0.8)
           .orderBy("doc_id")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // SoftDeDup: every doc keeps an exact integer micro-weight

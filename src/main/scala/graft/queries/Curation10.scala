@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.queries.Q._
 
 /** Round-11 batch, part 2 — state-lifecycle hardening: the
@@ -37,7 +38,7 @@ object Curation10 {
     // and read the healed per-group cardinalities — which must equal
     // a full count(DISTINCT) recompute.
     "q511_distinct_state_audit" -> ((s, dir) => {
-      val root = Curation2.tempIndexDir("graft_distinct_audit_")
+      val root = Fixtures.tempIndexDir("graft_distinct_audit_")
       val p = s"$root/state"
       try {
         val e = ev(s, dir)
@@ -56,7 +57,7 @@ object Curation10 {
             lit(if (healed) "1" else "0"))
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(root)
+      } finally Fixtures.deleteDir(root)
     }),
 
     // Cent-histogram compaction: bootstrap + two in-place appends
@@ -64,7 +65,7 @@ object Curation10 {
     // then exact quantiles off the COMPACTED state == the full
     // order-statistic recompute. File count pinned shrinking to 1.
     "q512_cent_state_compaction" -> ((s, dir) => {
-      val root = Curation2.tempIndexDir("graft_cent_compact_")
+      val root = Fixtures.tempIndexDir("graft_cent_compact_")
       val p = s"$root/state"
       try {
         val e = ev(s, dir)
@@ -88,14 +89,14 @@ object Curation10 {
           .withColumn("single_file", lit(if (after == 1L) "1" else "0"))
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(root)
+      } finally Fixtures.deleteDir(root)
     }),
 
     // Distinct-keys compaction: bootstrap + two appends (a file batch
     // per touched shard each), compact to one file per shard, audit
     // still clean, cardinalities invariant == full recompute.
     "q513_distinct_state_compaction" -> ((s, dir) => {
-      val root = Curation2.tempIndexDir("graft_distinct_compact_")
+      val root = Fixtures.tempIndexDir("graft_distinct_compact_")
       val p = s"$root/state"
       try {
         val e = ev(s, dir)
@@ -118,7 +119,7 @@ object Curation10 {
           .withColumn("audit_ok", lit(if (auditOk) "1" else "0"))
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(root)
+      } finally Fixtures.deleteDir(root)
     }),
 
     // OTel Summary + Log wire roundtrip — the two signal shapes q487
@@ -204,7 +205,7 @@ object Curation10 {
     // pins that the plant really exceeds the cap and the probe really
     // gets flagged (non-vacuity).
     "q515_lsh_bucket_cap" -> ((s, dir) => {
-      val root = Curation2.tempIndexDir("graft_bucket_cap_")
+      val root = Fixtures.tempIndexDir("graft_bucket_cap_")
       try {
         val docs = t(s, dir, "documents").select("doc_id", "text")
         val plantC = s.range(1, 31)
@@ -224,7 +225,7 @@ object Curation10 {
             Curation.BANDS, 0.8, bucketCap = 8)
           .orderBy("doc_id")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(root)
+      } finally Fixtures.deleteDir(root)
     }))
 
   /** 45 distinct pseudo-words — shared boilerplate prefix for the

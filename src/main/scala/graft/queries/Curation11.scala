@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.queries.Q._
 
 /** Round-11 batch, part 2 — the trainer-facing PACK tape over the
@@ -19,22 +20,18 @@ object Curation11 {
 
   private def h60(x: String) = graft.ops.Dedup.h60Sql(x)
 
-  /** The two-day SEMANTIC-index lifecycle, once per dir per JVM:
+  /** The two-day SEMANTIC-index lifecycle, once per dir per session:
     * bootstrap (frozen seeds + cell-partitioned snapshot index on
     * vec_id%4 ∈ {2,3}) → day 1 (%4 == 0) decisions + admit → day 2
     * (%4 == 1 PLUS sentinel 9500001 = verbatim embedding of the
     * smallest day-1 ADMITTED vector, which must come back
     * dup_sem_corpus via the APPENDED cells — the lifecycle witness).
     */
-  private val semCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SemIndex.Paths, org.apache.spark.sql.DataFrame)]()
   private[queries] def semLife(s: org.apache.spark.sql.SparkSession, dir: String)
       : (SemIndex.Paths, org.apache.spark.sql.DataFrame) =
-    semCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_sem_index_")
-      val p = SemIndex.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val emb = tp(s, d, "embeddings").select("vec_id", "embedding")
+    Fixtures(s, "Curation11.semLife", dir) { f =>
+      val p = SemIndex.Paths(f.root("graft_sem_index_"))
+      val emb = tp(s, dir, "embeddings").select("vec_id", "embedding")
       SemIndex.bootstrap(s,
         emb.where(pmod(col("vec_id"), lit(4L)).isin(2L, 3L)), p)
       val dec1 = SemIndex.processDay(s, p, 1,
@@ -46,13 +43,12 @@ object Curation11 {
       val dec2 = SemIndex.processDay(s, p, 2,
         emb.where(pmod(col("vec_id"), lit(4L)) === 1L)
           .unionByName(sentinel))
-      val all = dec1.select(lit(1).as("day"), col("vec_id"), col("cell"),
+      val all = f.pin(dec1.select(lit(1).as("day"), col("vec_id"), col("cell"),
           col("decision"))
         .unionByName(dec2.select(lit(2).as("day"), col("vec_id"),
-          col("cell"), col("decision")))
-        .localCheckpoint(true)
+          col("cell"), col("decision"))))
       (p, all)
-    })
+    }
 
   /** The STREAMED semantic lifecycle (same two days, the
     * [[graft.streaming.SemStream]] delivery engine: file source →
@@ -60,18 +56,15 @@ object Curation11 {
     * committed day re-offered and no-op'd) — third engine path onto
     * q521/q522's oracle.
     */
-  private val semStreamCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SemIndex.Paths, Seq[String], Boolean)]()
   private def semStreamed(s: org.apache.spark.sql.SparkSession,
                           dir: String): (SemIndex.Paths, Seq[String], Boolean) =
-    semStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_sem_stream_")
+    Fixtures(s, "Curation11.semStreamed", dir) { f =>
+      val root = f.root("graft_sem_stream_")
       val p = SemIndex.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
       val (days, stable) = graft.streaming.SemStream.runDaysStreamed(
-        s, d, p, s"$root/landing", s"$root/cp", s"$root/ledger")
+        s, dir, p, s"$root/landing", s"$root/cp", s"$root/ledger")
       (p, days, stable)
-    })
+    }
 
   /** The two-day PERCEPTUAL-index lifecycle (the q286 grouped-payload
     * construction: image id rounded to its group-of-3 base, so group
@@ -88,18 +81,14 @@ object Curation11 {
     * dups isolate the append path. Each day runs through the pinned
     * [[graft.ops.PhashIndex.processDay]].
     */
-  private val phashCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.PhashIndex.Paths, org.apache.spark.sql.DataFrame)]()
   private def phashLife(s: org.apache.spark.sql.SparkSession, dir: String)
       : (graft.ops.PhashIndex.Paths, org.apache.spark.sql.DataFrame) =
-    phashCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_phash_index_")
-      val p = graft.ops.PhashIndex.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation11.phashLife", dir) { f =>
+      val p = graft.ops.PhashIndex.Paths(f.root("graft_phash_index_"))
       val png = graft.ops.Multimodal.pngVarUdf
       def hashed(pred: org.apache.spark.sql.Column) =
         graft.ops.Multimodal.dHash(graft.ops.Multimodal.decodeCells(
-          t(s, d, "documents").where(pred)
+          t(s, dir, "documents").where(pred)
             .select(col("doc_id").as("media_id"),
               png(col("doc_id") - pmod(col("doc_id"), lit(3L)))
                 .as("payload"))))
@@ -115,13 +104,12 @@ object Curation11 {
           (pmod(grp, lit(2L)) === 1L && m3 === 1L)))
       val dec2 = graft.ops.PhashIndex.processDay(s, p, 2,
         hashed(pmod(grp, lit(2L)) === 0L && m3.isin(1L, 2L)))
-      val all = dec1.select(lit(1).as("day"), col("media_id"),
+      val all = f.pin(dec1.select(lit(1).as("day"), col("media_id"),
           col("decision"))
         .unionByName(dec2.select(lit(2).as("day"), col("media_id"),
-          col("decision")))
-        .localCheckpoint(true)
+          col("decision"))))
       (p, all)
-    })
+    }
 
   /** The MULTIMODAL admission day ([[graft.ops.MultiDay]]): one
     * consistent %4 split across all three modalities (snapshot
@@ -130,20 +118,16 @@ object Curation11 {
     * day 2 and its phash verdict can only come from the day-1
     * append). Overall-admitted docs append to all three indexes.
     */
-  private val multiCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.MultiDay.Paths, org.apache.spark.sql.DataFrame)]()
   private def multiLife(s: org.apache.spark.sql.SparkSession, dir: String)
       : (graft.ops.MultiDay.Paths, org.apache.spark.sql.DataFrame) =
-    multiCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_multi_day_")
-      val p = graft.ops.MultiDay.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val emb = t(s, d, "embeddings").select("vec_id", "embedding")
+    Fixtures(s, "Curation11.multiLife", dir) { f =>
+      val p = graft.ops.MultiDay.Paths(f.root("graft_multi_day_"))
+      val docs = t(s, dir, "documents").select("doc_id", "text")
+      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val png = graft.ops.Multimodal.pngVarUdf
       def hashedOf(pred: org.apache.spark.sql.Column) =
         graft.ops.Multimodal.dHash(graft.ops.Multimodal.decodeCells(
-          t(s, d, "documents").where(pred)
+          t(s, dir, "documents").where(pred)
             .select(col("doc_id").as("media_id"),
               png(col("doc_id") - pmod(col("doc_id"), lit(2L)))
                 .as("payload"))))
@@ -160,13 +144,12 @@ object Curation11 {
         docs.where(m4(col("doc_id")) === 1L),
         emb.where(m4(col("vec_id")) === 1L),
         hashedOf(m4(col("doc_id")) === 1L), docs)
-      val all = dec1.select(lit(1).as("day"), col("doc_id"),
+      val all = f.pin(dec1.select(lit(1).as("day"), col("doc_id"),
           col("decision"))
         .unionByName(dec2.select(lit(2).as("day"), col("doc_id"),
-          col("decision")))
-        .localCheckpoint(true)
+          col("decision"))))
       (p, all)
-    })
+    }
 
   val queries: Map[String, QFn] = Map(
 
@@ -317,11 +300,11 @@ object Curation11 {
     // Re-fit at 16 cells + re-index (the occupancy-contract repair
     // when the corpus outgrows its cells): the new index's card ==
     // the oracle's 16-cell quantizer over the same grown vector set.
-    // Writes a NEW root; the 8-cell lifecycle index is untouched.
+    // Writes a NEW root beside the lifecycle's (so Fixtures.release
+    // deletes it too); the 8-cell lifecycle index is untouched.
     "q535_sem_refit" -> ((s, dir) => {
       val src = semLife(s, dir)._1
       val dst = SemIndex.Paths(src.root + "_refit16")
-      sys.addShutdownHook(Curation2.deleteDir(dst.root))
       graft.ops.SemIndex.refit(s, src, dst, nCells = 16)
       SemIndex.indexStats(s, dst).orderBy("cell")
     }),

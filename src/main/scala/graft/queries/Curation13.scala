@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.queries.Q._
 
 /** Round-13 batch — the perceptual indexes' QUERY path (the r12
@@ -30,18 +31,14 @@ object Curation13 {
     * distance-0 neighbor the banded search MUST surface (the
     * pigeonhole witness the recall card certifies at 1e6 ppm).
     */
-  private val searchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PhashIndex.Paths, PhashIndex.Paths,
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
   private[graft] def searchLife(s: org.apache.spark.sql.SparkSession, dir: String)
       : (PhashIndex.Paths, PhashIndex.Paths,
          org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    searchCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_ph_search_")
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation13.searchLife", dir) { f =>
+      val root = f.root("graft_ph_search_")
       val pImg = PhashIndex.Paths(s"$root/img")
       val pAud = PhashIndex.Paths(s"$root/aud")
-      val docs = t(s, d, "documents").select("doc_id", "text")
+      val docs = t(s, dir, "documents").select("doc_id", "text")
       val pngUdf = Multimodal.pngVarUdf
       def imgHash(src: org.apache.spark.sql.DataFrame) =
         Multimodal.dHash(Multimodal.decodeCells(
@@ -56,9 +53,8 @@ object Curation13 {
       val qs = docs.where(pmod(col("doc_id"), lit(4L)) === 3L)
       PhashIndex.write(s, imgHash(idx), pImg)
       PhashIndex.write(s, audHash(idx), pAud)
-      (pImg, pAud, imgHash(qs).localCheckpoint(true),
-        audHash(qs).localCheckpoint(true))
-    })
+      (pImg, pAud, f.pin(imgHash(qs)), f.pin(audHash(qs)))
+    }
 
   /** The STREAMED retention calendar lifecycle (r12 verdict task 2):
     * admission days 1–2, the ledgered ttl2 control slot (expire day
@@ -66,103 +62,75 @@ object Curation13 {
     * around it and a replayed control no-op'd, then day 3 admitting
     * against the retained indexes.
     */
-  private val mmCalCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.MultiDay.Paths4, Boolean, Seq[String])]()
   private def mmCal(s: org.apache.spark.sql.SparkSession, dir: String)
       : (graft.ops.MultiDay.Paths4, Boolean, Seq[String]) =
-    mmCalCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_cal_")
-      val p = graft.ops.MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation13.mmCal", dir) { f =>
+      val p = graft.ops.MultiDay.Paths4(f.root("graft_mm_cal_"))
       val (noop, days) =
-        graft.streaming.MultiStream.runCalendarStreamed(s, d, p)
+        graft.streaming.MultiStream.runCalendarStreamed(s, dir, p)
       (p, noop, days)
-    })
+    }
 
   /** The same calendar through the BATCH engine — second path onto
     * q569's oracle.
     */
-  private val mmCalBatchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.MultiDay.Paths4]()
   private def mmCalBatch(s: org.apache.spark.sql.SparkSession,
                          dir: String): graft.ops.MultiDay.Paths4 =
-    mmCalBatchCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_calb_")
-      val p = graft.ops.MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      graft.ops.MultiDay.runDays4Calendar(s, d, p)
+    Fixtures(s, "Curation13.mmCalBatch", dir) { f =>
+      val p = graft.ops.MultiDay.Paths4(f.root("graft_mm_calb_"))
+      graft.ops.MultiDay.runDays4Calendar(s, dir, p)
       p
-    })
+    }
 
   /** The six-stage CALENDAR lifecycles (r12 verdict task 3): the
     * proven two-day full stack + the ledgered ttl2 slot + the
     * pin-derived witness day 3, batch and streamed engines.
     */
-  private val mm6CalCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.MultiDay.Paths4]()
   private def mm6Cal(s: org.apache.spark.sql.SparkSession,
                      dir: String): graft.ops.MultiDay.Paths4 =
-    mm6CalCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm6_cal_")
-      val p = graft.ops.MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      graft.ops.MultiDay.runDays6Calendar(s, d, p)
+    Fixtures(s, "Curation13.mm6Cal", dir) { f =>
+      val p = graft.ops.MultiDay.Paths4(f.root("graft_mm6_cal_"))
+      graft.ops.MultiDay.runDays6Calendar(s, dir, p)
       p
-    })
+    }
 
-  private val mm6CalStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.MultiDay.Paths4, Boolean, Seq[String])]()
   private def mm6CalStream(s: org.apache.spark.sql.SparkSession,
                            dir: String)
       : (graft.ops.MultiDay.Paths4, Boolean, Seq[String]) =
-    mm6CalStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm6_cals_")
-      val p = graft.ops.MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation13.mm6CalStream", dir) { f =>
+      val p = graft.ops.MultiDay.Paths4(f.root("graft_mm6_cals_"))
       val (noop, days) =
-        graft.streaming.MultiStream.runDays6CalendarStreamed(s, d, p)
+        graft.streaming.MultiStream.runDays6CalendarStreamed(s, dir, p)
       (p, noop, days)
-    })
+    }
 
   /** The CURATION N-day lifecycle with its retention slot driven
     * THROUGH the stream (the other half of r12 verdict task 2): days
     * 1–4 + the ttl4 control (keepFrom = 2), kill/restart, replayed
     * control no-op'd by the slot's done row.
     */
-  private val curTtlStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.CurationDay.Artifacts, Boolean, Seq[String])]()
   private def curTtlStream(s: org.apache.spark.sql.SparkSession,
                            dir: String)
       : (graft.ops.CurationDay.Artifacts, Boolean, Seq[String]) =
-    curTtlStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_cur_ttl_stream_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation13.curTtlStream", dir) { f =>
+      val a = graft.ops.CurationDay.Artifacts(f.root("graft_cur_ttl_stream_"))
       val (noop, days) =
-        graft.streaming.CurationStream.runTtlCalendarStreamed(s, d, a)
+        graft.streaming.CurationStream.runTtlCalendarStreamed(s, dir, a)
       (a, noop, days)
-    })
+    }
 
   /** The STREAMED size-cap calendar (the cap control riding the same
     * file-source stream, horizon pinned before mutation).
     */
-  private val capStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.CurationDay.Artifacts, Boolean, Seq[String],
-        Int)]()
   private def capStream(s: org.apache.spark.sql.SparkSession,
                         dir: String)
       : (graft.ops.CurationDay.Artifacts, Boolean, Seq[String], Int) =
-    capStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_cap_stream_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation13.capStream", dir) { f =>
+      val a = graft.ops.CurationDay.Artifacts(f.root("graft_cap_stream_"))
       val (noop, days, horizon) =
-        graft.streaming.CurationStream.runCapCalendarStreamed(s, d, a)
+        graft.streaming.CurationStream.runCapCalendarStreamed(s, dir, a)
       (a, noop, days, horizon)
-    })
+    }
 
   val queries: Map[String, QFn] = Map(
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.queries.Q._
 
 /** Round-14 batch — the r13 verdict's ranked tasks:
@@ -34,114 +35,84 @@ object Curation14 {
     * day 3 against the capped indexes, then the under-cap cap3
     * ledgered no-op.
     */
-  private val capBatchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, MultiDay.Paths4]()
   private def capBatch(s: org.apache.spark.sql.SparkSession,
                        dir: String): MultiDay.Paths4 =
-    capBatchCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_capb_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      MultiDay.runDays4CapCalendar(s, d, p)
+    Fixtures(s, "Curation14.capBatch", dir) { f =>
+      val p = MultiDay.Paths4(f.root("graft_mm_capb_"))
+      MultiDay.runDays4CapCalendar(s, dir, p)
       p
-    })
+    }
 
   /** The same calendar with the cap controls riding the stream
     * (kill/restart around the slot, replayed control no-op'd).
     */
-  private val capStream4Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (MultiDay.Paths4, Boolean, Seq[String], Int, Int)]()
   private def capStream4(s: org.apache.spark.sql.SparkSession,
                          dir: String)
       : (MultiDay.Paths4, Boolean, Seq[String], Int, Int) =
-    capStream4Cache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_caps_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation14.capStream4", dir) { f =>
+      val p = MultiDay.Paths4(f.root("graft_mm_caps_"))
       val (noop, days, h2, h3) =
-        graft.streaming.MultiStream.runCapCalendarStreamed4(s, d, p)
+        graft.streaming.MultiStream.runCapCalendarStreamed4(s, dir, p)
       (p, noop, days, h2, h3)
-    })
+    }
 
   /** The streamed COMPACTION calendar (op = "compact" control slots
     * interleaved with the admission days).
     */
-  private val compactStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (MultiDay.Paths4, Boolean, Seq[String])]()
   private def compactStream(s: org.apache.spark.sql.SparkSession,
                             dir: String)
       : (MultiDay.Paths4, Boolean, Seq[String]) =
-    compactStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_cmps_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation14.compactStream", dir) { f =>
+      val p = MultiDay.Paths4(f.root("graft_mm_cmps_"))
       val (noop, days) =
-        graft.streaming.MultiStream.runDays4CompactStreamed(s, d, p)
+        graft.streaming.MultiStream.runDays4CompactStreamed(s, dir, p)
       (p, noop, days)
-    })
+    }
 
   /** The CURATION-side streamed compaction calendar
     * ([[graft.streaming.CurationStream.runCompactCalendarStreamed]] —
     * the q591/q592 symmetry: both calendars serve all three control
     * ops).
     */
-  private val curCompactCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.CurationDay.Artifacts, Boolean, Seq[String],
-        Boolean)]()
   private def curCompactStream(s: org.apache.spark.sql.SparkSession,
                                dir: String)
       : (graft.ops.CurationDay.Artifacts, Boolean, Seq[String],
          Boolean) =
-    curCompactCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_cur_cmps_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation14.curCompactStream", dir) { f =>
+      val a = graft.ops.CurationDay.Artifacts(f.root("graft_cur_cmps_"))
       val (noop, days, settled) =
-        graft.streaming.CurationStream.runCompactCalendarStreamed(s, d, a)
+        graft.streaming.CurationStream.runCompactCalendarStreamed(s, dir, a)
       (a, noop, days, settled)
-    })
+    }
 
   /** The FULL maintenance calendar — ttl + cap + compact interleaved
     * in ONE streamed run
     * ([[graft.streaming.MultiStream.runFullCalendarStreamed]]).
     */
-  private val fullCalCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (MultiDay.Paths4, Boolean, Seq[String], Int, Boolean)]()
   private def fullCal(s: org.apache.spark.sql.SparkSession,
                       dir: String)
       : (MultiDay.Paths4, Boolean, Seq[String], Int, Boolean) =
-    fullCalCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_full_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation14.fullCal", dir) { f =>
+      val p = MultiDay.Paths4(f.root("graft_mm_full_"))
       val (noop, days, horizon, settled) =
-        graft.streaming.MultiStream.runFullCalendarStreamed(s, d, p)
+        graft.streaming.MultiStream.runFullCalendarStreamed(s, dir, p)
       (p, noop, days, horizon, settled)
-    })
+    }
 
   /** The CURATION-side full maintenance calendar
     * ([[graft.streaming.CurationStream.runFullCalendarStreamed]] —
     * runnable because the streamed cap slot rides capDayPinned).
     */
-  private val curFullCalCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.CurationDay.Artifacts, Boolean, Seq[String],
-        Int, Boolean)]()
   private def curFullCal(s: org.apache.spark.sql.SparkSession,
                          dir: String)
       : (graft.ops.CurationDay.Artifacts, Boolean, Seq[String], Int,
          Boolean) =
-    curFullCalCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_cur_full_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation14.curFullCal", dir) { f =>
+      val a = graft.ops.CurationDay.Artifacts(f.root("graft_cur_full_"))
       val (noop, days, horizon, settled) =
-        graft.streaming.CurationStream.runFullCalendarStreamed(s, d, a)
+        graft.streaming.CurationStream.runFullCalendarStreamed(s, dir, a)
       (a, noop, days, horizon, settled)
-    })
+    }
 
   /** The standalone lexical-evidence lifecycle: a persisted dedup
     * index over the %4 ∈ {0,1,2} corpus; the delta = the %4 == 3
@@ -152,20 +123,16 @@ object Curation14 {
     * shingle set + 2 — Jaccard (W−2)/W ≥ 0.8, the near branch).
     * Returns (index path, corpus texts, rejected texts).
     */
-  private val evidenceCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]()
   private def evidenceLife(s: org.apache.spark.sql.SparkSession,
                            dir: String)
       : (String, org.apache.spark.sql.DataFrame,
          org.apache.spark.sql.DataFrame) =
-    evidenceCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_lex_ev_")
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation14.evidenceLife", dir) { f =>
+      val root = f.root("graft_lex_ev_")
       val path = s"$root/lex_index"
-      val docs = tp(s, d, "documents").select("doc_id", "text")
-      val corpus = docs.where(pmod(col("doc_id"), lit(4L)).isin(0L, 1L, 2L))
-        .localCheckpoint(true)
+      val docs = tp(s, dir, "documents").select("doc_id", "text")
+      val corpus = f.pin(
+        docs.where(pmod(col("doc_id"), lit(4L)).isin(0L, 1L, 2L)))
       val exactSn = corpus.orderBy("doc_id").limit(1)
         .select(lit(9900001L).as("doc_id"), col("text"))
       val nearSn = corpus
@@ -173,19 +140,17 @@ object Curation14 {
         .orderBy("doc_id").limit(1)
         .select(lit(9900002L).as("doc_id"),
           concat(col("text"), lit(" zz9")).as("text"))
-      val batch = docs.where(pmod(col("doc_id"), lit(4L)) === 3L)
-        .unionByName(exactSn).unionByName(nearSn)
-        .localCheckpoint(true)
+      val batch = f.pin(docs.where(pmod(col("doc_id"), lit(4L)) === 3L)
+        .unionByName(exactSn).unionByName(nearSn))
       Dedup.writeDedupIndex(corpus, "text", "doc_id", path)
       val dec = Dedup.incrementalDedupIndexed(path, docs, batch,
         "text", "doc_id", 3, 16, 4, 0.8)
-      val rejected = batch.join(
+      val rejected = f.pin(batch.join(
         dec.where(col("decision").isin(
             "dup_exact_corpus", "near_dup_corpus"))
-          .select("doc_id"), "doc_id")
-        .localCheckpoint(true)
+          .select("doc_id"), "doc_id"))
       (path, corpus, rejected)
-    })
+    }
 
   val queries: Map[String, QFn] = Map(
 

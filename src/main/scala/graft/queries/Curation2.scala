@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.ops.{Dedup, Similarity, TextOps}
 import Q._
 
@@ -19,22 +20,6 @@ object Curation2 {
 
   private val K = 16; private val BANDS = 4; private val NGRAM = 3
 
-  /** Fresh scratch directory for a persisted-index round trip; paired
-    * with [[deleteDir]] so gate/bench runs leave nothing behind.
-    */
-  private[graft] def tempIndexDir(prefix: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      prefix + java.util.UUID.randomUUID().toString.replace("-", ""))
-      .getAbsolutePath
-
-  private[graft] def deleteDir(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rec)
-      f.delete(); ()
-    }
-    rec(new java.io.File(path))
-  }
   private val sh = Dedup.shinglesSql("text", NGRAM)
   private val P = Dedup.P
 
@@ -282,7 +267,7 @@ object Curation2 {
     // construction (shares its oracle, the q283 pattern).
     "q338_ann_sq8_indexed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val idx = tempIndexDir("graft_sq8_index_")
+      val idx = Fixtures.tempIndexDir("graft_sq8_index_")
       // build inside the try (a mid-build failure must still clean up);
       // materialize (lineage-truncating) BEFORE deleting the on-disk
       // index so every gate/bench run cleans up after itself (r7 ADVICE)
@@ -292,7 +277,7 @@ object Curation2 {
             "vec_id", "embedding", 5)
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // Diversity-quota retrieval: top-5 with at most 2 results per label.

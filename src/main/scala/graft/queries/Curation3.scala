@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.ops.{Dedup, Similarity, TextOps, UrlOps}
 import Q._
 
@@ -86,7 +87,7 @@ object Curation3 {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
       val delta = emb.where(pmod(col("vec_id"), lit(5L)) === 0)
-      val idx = Curation2.tempIndexDir("graft_sq8_append_")
+      val idx = Fixtures.tempIndexDir("graft_sq8_append_")
       // build sits INSIDE the try: a failure mid-build must still
       // clean up the scratch dir (r8 self-review)
       try {
@@ -97,7 +98,7 @@ object Curation3 {
             "vec_id", "embedding", 5)
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // URL dedup: canonicalize the messy raw forms, one hash agg per
@@ -121,7 +122,7 @@ object Curation3 {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
       val delta = emb.where(pmod(col("vec_id"), lit(5L)) === 0)
-      val idx = Curation2.tempIndexDir("graft_sq8_compact_")
+      val idx = Fixtures.tempIndexDir("graft_sq8_compact_")
       try {
         Similarity.writeSq8Index(corpus, "vec_id", "embedding", idx)
         Similarity.appendSq8Index(s, idx, delta, "vec_id", "embedding",
@@ -131,7 +132,7 @@ object Curation3 {
             "vec_id", "embedding", 5)
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // Dedup-index append: ingest batch1 into the persisted index, then
@@ -145,7 +146,7 @@ object Curation3 {
       val batch1 = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
       val batch2 = docs.where(pmod(col("doc_id"), lit(5L)) === 1)
       val grown = docs.where(pmod(col("doc_id"), lit(5L)) =!= 1)
-      val idx = Curation2.tempIndexDir("graft_dedup_append_")
+      val idx = Fixtures.tempIndexDir("graft_dedup_append_")
       try {
         Dedup.writeDedupIndex(corpus0, "text", "doc_id", idx, NGRAM, K,
           BANDS)
@@ -155,7 +156,7 @@ object Curation3 {
             NGRAM, K, BANDS, 0.8)
           .orderBy("doc_id")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // Gopher repetition filters, intra-doc: duplicate-2-gram fraction
@@ -335,7 +336,7 @@ object Curation3 {
     "q363_streaming_sq8_ingest" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
-      val idx = Curation2.tempIndexDir("graft_sq8_stream_")
+      val idx = Fixtures.tempIndexDir("graft_sq8_stream_")
       try {
         Similarity.writeSq8Index(corpus, "vec_id", "embedding", idx)
         val deltaStream = graft.core.Tables.stream(s, dir, "embeddings")
@@ -364,7 +365,7 @@ object Curation3 {
             "vec_id", "embedding", 5)
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // Dedup-index compaction: append batch1, COMPACT the hash/band
@@ -376,7 +377,7 @@ object Curation3 {
       val batch1 = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
       val batch2 = docs.where(pmod(col("doc_id"), lit(5L)) === 1)
       val grown = docs.where(pmod(col("doc_id"), lit(5L)) =!= 1)
-      val idx = Curation2.tempIndexDir("graft_dedup_compact_")
+      val idx = Fixtures.tempIndexDir("graft_dedup_compact_")
       try {
         Dedup.writeDedupIndex(corpus0, "text", "doc_id", idx, NGRAM, K,
           BANDS)
@@ -387,7 +388,7 @@ object Curation3 {
             NGRAM, K, BANDS, 0.8)
           .orderBy("doc_id")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // Hard-negative mining (DPR-style): per query the cosine band
@@ -446,11 +447,11 @@ object Curation3 {
     // everything re-derivable from the raw embeddings by the oracle.
     "q372_sq8_index_stats" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val idx = Curation2.tempIndexDir("graft_sq8_stats_")
+      val idx = Fixtures.tempIndexDir("graft_sq8_stats_")
       try {
         Similarity.writeSq8Index(emb, "vec_id", "embedding", idx)
         Similarity.sq8IndexStats(s, idx).localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // Domain-stratified split: the split key is the registered domain,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.ops.{Classify, Events, Graph, Scale, TextOps}
 import graft.queries.Q._
 
@@ -379,7 +380,7 @@ object Curation4 {
       val deleted = corpus.where(pmod(col("doc_id"), lit(7L)) === 0)
       val remaining = corpus.where(pmod(col("doc_id"), lit(7L)) =!= 0)
       val batch = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
-      val idx = Curation2.tempIndexDir("graft_dedup_delete_")
+      val idx = Fixtures.tempIndexDir("graft_dedup_delete_")
       try {
         graft.ops.Dedup.writeDedupIndex(corpus, "text", "doc_id", idx,
           3, 16, 4)
@@ -389,7 +390,7 @@ object Curation4 {
             "text", "doc_id", 3, 16, 4, 0.8)
           .orderBy("doc_id")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // MAD-robust rate anomalies: top-5 most deviant hour buckets per
@@ -412,7 +413,7 @@ object Curation4 {
     // keep their build-time codes.
     "q385_sq8_index_delete" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val idx = Curation2.tempIndexDir("graft_sq8_delete_")
+      val idx = Fixtures.tempIndexDir("graft_sq8_delete_")
       try {
         graft.ops.Similarity.writeSq8Index(emb, "vec_id", "embedding", idx)
         graft.ops.Similarity.deleteFromSq8Index(s, idx,
@@ -421,7 +422,7 @@ object Curation4 {
             emb.filter(col("vec_id") < 10), "vec_id", "embedding", 5)
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // Ingest-time hysteresis alerting: per-shard open-bin state with

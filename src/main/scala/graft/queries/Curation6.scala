@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.ops.{Events, Quality, Scale, TextOps}
 import graft.queries.Q._
 
@@ -151,7 +152,7 @@ object Curation6 {
       val ev = t(s, dir, "events").where(col("event_id").isNotNull)
       val snap = ev.where(pmod(col("event_id"), lit(5L)) =!= 0)
       val delta = ev.where(pmod(col("event_id"), lit(5L)) === 0)
-      val statePath = Curation2.tempIndexDir("graft_agg_state_")
+      val statePath = Fixtures.tempIndexDir("graft_agg_state_")
       try {
         Scale.aggState(snap, "event_type", col("value"))
           .write.parquet(statePath)
@@ -159,7 +160,7 @@ object Curation6 {
             "event_type", col("value"))
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(statePath)
+      } finally Fixtures.deleteDir(statePath)
     }),
 
     // Temporal sequence rules: a FOLLOWED BY b within 6 h, support =
@@ -243,7 +244,7 @@ object Curation6 {
       val ev = t(s, dir, "events").where(col("event_id").isNotNull)
       val snap = ev.where(pmod(col("event_id"), lit(5L)) =!= 0)
       val delta = ev.where(pmod(col("event_id"), lit(5L)) === 0)
-      val statePath = Curation2.tempIndexDir("graft_distinct_state_")
+      val statePath = Fixtures.tempIndexDir("graft_distinct_state_")
       try {
         Scale.writeDistinctState(snap, "event_type", "user_id",
           nShards = 16, statePath)
@@ -251,7 +252,7 @@ object Curation6 {
             "user_id", nShards = 16)
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(statePath)
+      } finally Fixtures.deleteDir(statePath)
     }))
 
   private val baseOracles: Map[String, String] = Map(

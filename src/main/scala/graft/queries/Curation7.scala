@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.ops.{Corpus, Dedup, Events, Graph, Quality, Scale}
 import graft.queries.Q._
 import graft.functions.PixieFunctions.idiv
@@ -32,9 +33,9 @@ object Curation7 {
       val snap = ev.where(pmod(col("event_id"), lit(5L)) =!= 0)
       val d1 = ev.where(pmod(col("event_id"), lit(10L)) === 0)
       val d2 = ev.where(pmod(col("event_id"), lit(10L)) === 5)
-      val p0 = Curation2.tempIndexDir("graft_hll_a_")
-      val p12 = Curation2.tempIndexDir("graft_hll_b_")
-      val p21 = Curation2.tempIndexDir("graft_hll_c_")
+      val p0 = Fixtures.tempIndexDir("graft_hll_a_")
+      val p12 = Fixtures.tempIndexDir("graft_hll_b_")
+      val p21 = Fixtures.tempIndexDir("graft_hll_c_")
       try {
         Scale.writeHllState(snap, "event_type", "user_id", 16, p0)
         Scale.foldHllState(s, p0, d1, "event_type", "user_id", 16)
@@ -61,8 +62,8 @@ object Curation7 {
           .orderBy("event_type")
           .localCheckpoint(true)
       } finally {
-        Curation2.deleteDir(p0); Curation2.deleteDir(p12)
-        Curation2.deleteDir(p21)
+        Fixtures.deleteDir(p0); Fixtures.deleteDir(p12)
+        Fixtures.deleteDir(p21)
       }
     }),
 
@@ -165,7 +166,7 @@ object Curation7 {
     "q462_window_count_state" -> ((s, dir) => {
       val cutNs = 1706400000000000000L // 2024-01-28T00:00:00Z
       val ev = t(s, dir, "events")
-      val p = Curation2.tempIndexDir("graft_window_state_")
+      val p = Fixtures.tempIndexDir("graft_window_state_")
       try {
         Scale.writeWindowState(ev.where(col("ts") < cutNs), "event_type",
           "ts", 3600000000L, 168, p)
@@ -175,7 +176,7 @@ object Curation7 {
             "event_type")
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(p)
+      } finally Fixtures.deleteDir(p)
     }),
 
     // EWMA anomaly bins (exact binary half-life, 40-bucket horizon).
@@ -200,7 +201,7 @@ object Curation7 {
       // scratch parquet dir, the post-processing reads it back as a
       // distributed frame, and the eager localCheckpoint pins the
       // answer before the scratch dir is deleted.
-      val p = Curation2.tempIndexDir("graft_q465_sink_")
+      val p = Fixtures.tempIndexDir("graft_q465_sink_")
       val in = graft.core.Tables.stream(s, dir, "events")
         .where(col("user_id").isNotNull)
         .select(col("user_id"), col("ts").as("ts_ns"))
@@ -230,7 +231,7 @@ object Curation7 {
           .localCheckpoint(true)
       } finally {
         if (q.isActive) q.stop()
-        Curation2.deleteDir(p)
+        Fixtures.deleteDir(p)
       }
     }),
 
@@ -273,7 +274,7 @@ object Curation7 {
     "q469_session_state_fold" -> ((s, dir) => {
       val cutNs = 1705276800000000000L // 2024-01-15T00:00:00Z
       val ev = t(s, dir, "events")
-      val p = Curation2.tempIndexDir("graft_session_state_")
+      val p = Fixtures.tempIndexDir("graft_session_state_")
       try {
         Events.writeSessionState(ev.where(col("ts") < cutNs), "user_id",
           "ts", 1800000000L, p)
@@ -281,7 +282,7 @@ object Curation7 {
             "user_id", "ts", 1800000000L)
           .orderBy("user_id", "session_id")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(p)
+      } finally Fixtures.deleteDir(p)
     }),
 
     // Pre-join explosion audit: top-10 user keys by self-join output
@@ -355,9 +356,9 @@ object Curation7 {
       val snap = ev.where(pmod(col("event_id"), lit(5L)) =!= 0)
       val delta = ev.where(pmod(col("event_id"), lit(5L)) === 0)
       val cutNs = 1706400000000000000L // q462's watermark cut
-      val pa = Curation2.tempIndexDir("graft_panel_agg_")
-      val pd = Curation2.tempIndexDir("graft_panel_distinct_")
-      val pw = Curation2.tempIndexDir("graft_panel_window_")
+      val pa = Fixtures.tempIndexDir("graft_panel_agg_")
+      val pd = Fixtures.tempIndexDir("graft_panel_distinct_")
+      val pw = Fixtures.tempIndexDir("graft_panel_window_")
       try {
         Scale.aggState(snap, "event_type", col("value"))
           .write.parquet(pa)
@@ -383,8 +384,8 @@ object Curation7 {
           .orderBy("event_type")
           .localCheckpoint(true)
       } finally {
-        Curation2.deleteDir(pa); Curation2.deleteDir(pd)
-        Curation2.deleteDir(pw)
+        Fixtures.deleteDir(pa); Fixtures.deleteDir(pd)
+        Fixtures.deleteDir(pw)
       }
     }),
 

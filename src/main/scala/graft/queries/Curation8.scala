@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.queries.Q._
 import graft.functions.PixieFunctions.idiv
 
@@ -18,35 +19,28 @@ object Curation8 {
 
   import graft.ops.{CurationDay, Scale}
 
-  /** Curation-day artifacts are built ONCE per sf dir per JVM (the
+  /** Curation-day artifacts are built ONCE per sf dir per session (the
     * production shape: day-0 bootstrap is amortized across delta
     * days, and q488-q491 are four facets of ONE delta-day run). The
-    * scratch root lives until JVM exit (shutdown hook deletes it), so
-    * every facet reads the same persisted artifacts.
+    * scratch root lives until [[Fixtures.release]], so every facet
+    * reads the same persisted artifacts.
     */
-  private val dayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CurationDay.Artifacts]()
   private def day(s: org.apache.spark.sql.SparkSession,
                   dir: String): CurationDay.Artifacts =
-    dayCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_curation_day_")
-      val a = CurationDay.Artifacts(root)
-      CurationDay.bootstrap(s, d, a)
-      sys.addShutdownHook(Curation2.deleteDir(root))
+    Fixtures(s, "Curation8.day", dir) { f =>
+      val a = CurationDay.Artifacts(f.root("graft_curation_day_"))
+      CurationDay.bootstrap(s, dir, a)
       a
-    })
+    }
 
   /** The delta-day decision frame, computed once per dir (it feeds
     * q488, q489, and q491) and pinned with an eager localCheckpoint.
     */
-  private val decCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
   private def dayDecisions(s: org.apache.spark.sql.SparkSession,
                            dir: String): org.apache.spark.sql.DataFrame =
-    decCache.computeIfAbsent(dir, { d: String =>
-      CurationDay.decisions(s, day(s, d), tp(s, d, "documents"))
-        .localCheckpoint(true)
-    })
+    Fixtures(s, "Curation8.dayDecisions", dir) { f =>
+      f.pin(CurationDay.decisions(s, day(s, dir), tp(s, dir, "documents")))
+    }
 
   /** The TWO-day lifecycle run (q492-q494), computed once per dir:
     * bootstrap on the {2,3,4}-snapshot -> day-1 decisions -> ADMIT
@@ -55,17 +49,13 @@ object Curation8 {
     * day-2 decisions -> day-2 admit. Returns the artifacts and the
     * checkpointed day-2 decision frame.
     */
-  private val twoDayCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (CurationDay.Artifacts, org.apache.spark.sql.DataFrame)]()
   private def twoDay(s: org.apache.spark.sql.SparkSession, dir: String)
       : (CurationDay.Artifacts, org.apache.spark.sql.DataFrame) =
-    twoDayCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_curation_2day_")
-      val a = CurationDay.Artifacts(root)
-      CurationDay.bootstrapTwoDay(s, d, a)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val fetch = tp(s, d, "documents")
-      val dec1 = CurationDay.decisions(s, a, fetch).localCheckpoint(true)
+    Fixtures(s, "Curation8.twoDay", dir) { f =>
+      val a = CurationDay.Artifacts(f.root("graft_curation_2day_"))
+      CurationDay.bootstrapTwoDay(s, dir, a)
+      val fetch = tp(s, dir, "documents")
+      val dec1 = f.pin(CurationDay.decisions(s, a, fetch))
       CurationDay.admitDay(s, a, dec1, a.deltaDocs, a.manifest0,
         a.manifest1)
       // event-state write side: persist day-1's folded agg partials
@@ -78,33 +68,27 @@ object Curation8 {
         .write.mode("overwrite").parquet(a.aggState1)
       graft.ops.Scale.appendDistinctState(s, a.distinctState,
         s.read.parquet(a.deltaEvents), "event_type", "user_id", 16)
-      CurationDay.writeDay2Drop(s, d, a, dec1)
-      val dec2 = CurationDay.decisions(s, a, fetch, Some(a.day2Docs))
-        .localCheckpoint(true)
+      CurationDay.writeDay2Drop(s, dir, a, dec1)
+      val dec2 = f.pin(CurationDay.decisions(s, a, fetch, Some(a.day2Docs)))
       CurationDay.admitDay(s, a, dec2, a.day2Docs, a.manifest1,
         a.manifest2)
       (a, dec2)
-    })
+    }
 
   /** The grown manifest and the folded states, computed once per dir
     * (each feeds its own gate row AND the q491 report — without the
     * cache the folds would run twice per gate pass).
     */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
   private def dayManifest(s: org.apache.spark.sql.SparkSession,
                           dir: String): org.apache.spark.sql.DataFrame =
-    manifestCache.computeIfAbsent(dir, { d: String =>
-      CurationDay.grownManifest(s, day(s, d), dayDecisions(s, d))
-        .localCheckpoint(true)
-    })
-  private val statesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
+    Fixtures(s, "Curation8.dayManifest", dir) { f =>
+      f.pin(CurationDay.grownManifest(s, day(s, dir), dayDecisions(s, dir)))
+    }
   private def dayStates(s: org.apache.spark.sql.SparkSession,
                         dir: String): org.apache.spark.sql.DataFrame =
-    statesCache.computeIfAbsent(dir, { d: String =>
-      CurationDay.foldedStates(s, day(s, d)).localCheckpoint(true)
-    })
+    Fixtures(s, "Curation8.dayStates", dir) { f =>
+      f.pin(CurationDay.foldedStates(s, day(s, dir)))
+    }
 
   val queries: Map[String, QFn] = Map(
 
@@ -212,12 +196,12 @@ object Curation8 {
     // GATE row, not just a spec (two engine MODES, one oracle: the
     // q483 pattern applied to execution infrastructure).
     "q501_kcore_reliable_ckpt" -> ((s, dir) => {
-      val ck = Curation2.tempIndexDir("graft_reliable_ckpt_")
       // the checkpoint dir CANNOT be unset on a SparkContext, so when
       // none was set before, the dir must stay valid for the session
       // (a later checkpoint() would otherwise write into a deleted
-      // path) — defer cleanup to JVM exit instead of the finally
-      sys.addShutdownHook(Curation2.deleteDir(ck))
+      // path) — a session fixture, deleted by Fixtures.release
+      val ck = Fixtures(s, "Curation8.reliableCkpt", dir)(
+        _.root("graft_reliable_ckpt_"))
       val prev = s.sparkContext.getCheckpointDir
       s.sparkContext.setCheckpointDir(ck)
       try {
@@ -252,7 +236,7 @@ object Curation8 {
         .where(col("event_type").isNotNull && col("value").isNotNull &&
           !isnan(col("value")))
       val cut = 1706400000000000000L // 2024-01-28T00:00:00Z
-      val p = Curation2.tempIndexDir("graft_cent_hist_")
+      val p = Fixtures.tempIndexDir("graft_cent_hist_")
       try {
         Scale.writeCentHist(ev.where(col("ts") < cut), "event_type",
           col("value"), p)
@@ -264,7 +248,7 @@ object Curation8 {
               "p99_cents" -> 990000L))
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(p)
+      } finally Fixtures.deleteDir(p)
     }),
 
     // Sampling manifest: the q498 token-budget plan projected onto
@@ -301,12 +285,12 @@ object Curation8 {
     "q502_dedup_index_stats" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
-      val idx = Curation2.tempIndexDir("graft_dedup_stats_")
+      val idx = Fixtures.tempIndexDir("graft_dedup_stats_")
       try {
         graft.ops.Dedup.writeDedupIndex(corpus, "text", "doc_id", idx,
           Curation.NGRAM, Curation.K, Curation.BANDS)
         graft.ops.Dedup.dedupIndexStats(s, idx).localCheckpoint(true)
-      } finally Curation2.deleteDir(idx)
+      } finally Fixtures.deleteDir(idx)
     }),
 
     // Schema-evolution report: two event-file batches written under
@@ -316,7 +300,7 @@ object Curation8 {
     // presence/type columns pin the footer-level merge; the row-mass
     // column is data-bound (the oracle re-derives it from events).
     "q499_schema_evolution" -> ((s, dir) => {
-      val p = Curation2.tempIndexDir("graft_schema_evo_")
+      val p = Fixtures.tempIndexDir("graft_schema_evo_")
       try {
         val ev = t(s, dir, "events").where(col("event_id").isNotNull)
         ev.where(pmod(col("event_id"), lit(2L)) === 0)
@@ -328,7 +312,7 @@ object Curation8 {
         graft.core.Layout.schemaEvolutionReport(s, p)
           .orderBy("column")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(p)
+      } finally Fixtures.deleteDir(p)
     }),
 
     // Exactly-once batch ingest: b1 ingested, b1 REPLAYED (must
@@ -336,7 +320,7 @@ object Curation8 {
     // batch exactly once and the replay's return value is pinned in
     // the output row.
     "q500_idempotent_ingest" -> ((s, dir) => {
-      val p = Curation2.tempIndexDir("graft_ingest_")
+      val p = Fixtures.tempIndexDir("graft_ingest_")
       try {
         val ev = t(s, dir, "events").where(col("event_id").isNotNull)
           .select("event_id", "event_type")
@@ -354,7 +338,7 @@ object Curation8 {
               .mkString("")))
           .orderBy("__batch", "event_type")
           .localCheckpoint(true)
-      } finally Curation2.deleteDir(p)
+      } finally Fixtures.deleteDir(p)
     }),
 
     // OTel export oracle gate: per-(event_type, day) grid -> Gauge

@@ -587,7 +587,7 @@ object Pxl {
             graft.meta.MetadataOps.resolve(fn, df, fullDim, in, out)
         blankOnMiss(resolved, out)
       },
-      modules = Map("pxviews" -> pxviewsSource),
+      modules = Map("pxviews" -> (() => pxviewsSource)),
       sketchQuantiles = sketchQuantiles,
       udtfs = (name, args) => {
         import graft.sources.CatalogUdtfs

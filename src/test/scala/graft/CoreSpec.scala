@@ -116,4 +116,15 @@ class CoreSpec extends AnyFunSuite {
     val got = df.select(grpcStatusCodeToStr($"c")).as[String].collect().toSeq
     assert(got == Seq("OK", "Unavailable", "Unknown"))
   }
+
+  test("Par.run rethrows a failure only after every branch finished") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      graft.core.Par.run(
+        () => throw new IllegalStateException("boom"),
+        () => { Thread.sleep(300); siblingDone.set(true) })
+    }
+    assert(e.getMessage == "boom")
+    assert(siblingDone.get, "Par.run threw while a sibling was still running")
+  }
 }

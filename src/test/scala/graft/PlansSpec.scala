@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{ExecStats, MultiOutput}
+import graft.plans.MultiOutput
 import graft.functions.PixieFunctions._
 
 class PlansSpec extends AnyFunSuite {
@@ -29,21 +29,6 @@ class PlansSpec extends AnyFunSuite {
     // cache released after the script (unpersist is async; storage level
     // reverts to NONE immediately)
     assert(base.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-  }
-
-  test("observe metrics reach the listener per action") {
-    val collector = ExecStats.install(spark)
-    val df = ExecStats.observed(
-      graft.core.Tables(spark, dir, "nation"), approxRowBytes = 32)
-    df.collect()
-    // listener delivery is async; poll briefly
-    val deadline = System.currentTimeMillis() + 5000
-    while (collector.metrics.isEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    val m = collector.metrics.values.headOption
-    assert(m.isDefined, "no observed metrics arrived")
-    assert(m.get.getAs[Long]("output_rows") == 25L)
-    assert(m.get.getAs[Long]("approx_bytes") == 800L)
   }
 
   test("restrict-columns policy drops, redacts, and prunes the scan") {

@@ -4,7 +4,9 @@ engine itself is pure Scala/Spark). Usage:
   python3 tools/check.py <sfDir> <outDir>
 Reads each <outDir>/<name> parquet written by graft.Verify, runs the
 matching SQL from oracle_sql.json in DuckDB over the sfDir tables, and
-compares (rows, schema-by-name, sorted values)."""
+compares (rows, schema-by-name, sorted values). The names come from
+<outDir>/declared.json, which Verify writes before running anything, so a
+query that wrote no output counts as a failure."""
 import sys, json, glob, os
 import duckdb
 
@@ -16,9 +18,17 @@ for t in ["region","nation","customer","supplier","part","orders",
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fail = 0
-names = sorted(d for d in os.listdir(outdir)
-               if os.path.isdir(os.path.join(outdir, d)))
+declared = f"{outdir}/declared.json"
+if os.path.exists(declared):
+    names = sorted(json.load(open(declared)))
+else:
+    print(f"WARN {declared} missing: checking only the written outputs",
+          file=sys.stderr)
+    names = sorted(d for d in os.listdir(outdir)
+                   if os.path.isdir(os.path.join(outdir, d)))
 for name in names:
+    if not os.path.isdir(os.path.join(outdir, name)):
+        print(f"FAIL {name}: not written"); fail += 1; continue
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
         print(f"FAIL {name}: no parquet written"); fail += 1; continue

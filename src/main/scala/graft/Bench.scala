@@ -12,13 +12,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
     // Warm the session (executor threads, codegen, parquet footers) so the
     // first measured query isn't charged Spark's one-time init.
     graft.core.Tables.all.foreach(t =>
@@ -39,10 +33,7 @@ object Bench {
     }
     // Optional dev-only subset (the driver sets no filter): regex over
     // query names, e.g. SPARK_GRAFT_BENCH_FILTER='q13[12]_'.
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        nameFilter.forall(_.findFirstIn(name).isDefined) }
+    val sorted = Harness.select(sys.env.get("SPARK_GRAFT_BENCH_FILTER"))
     val remeasured = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     // Lifecycle fixtures stay built across the re-measurements and are
     // released (with their build times) once every query has run.
@@ -75,9 +66,7 @@ object Bench {
           name -> Seq(t, t2, t3).sorted.apply(1)
         } else name -> t
       }
-    } finally graft.core.Fixtures.release(spark).foreach { case (n, d, sec) =>
-      System.err.println(f"[bench] fixture $n%s $d%s built in $sec%.1f s")
-    }
+    } finally Harness.releaseFixtures(spark, "bench")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only plan dump: args = [outDir, sfDir, nameRegex?].
   * Writes `explain("formatted")` of each matching SparkEntry query to
@@ -14,19 +13,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        nameFilter.forall(_.findFirstIn(name).isDefined) }
+    Harness.select(args.lift(2))
       .foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)

@@ -31,8 +31,7 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureTimeConfig(spark)
     val df = nsView(spark.read.parquet(s"$dir/$name.parquet"))
-    if (spreadTables(spark)(name)) spread(spark, df, s"$dir/$name.parquet")
-    else df
+    if (SpreadTables(name)) spread(spark, df, s"$dir/$name.parquet") else df
   }
 
   /** [[apply]] WITHOUT the scan spread — the consumer-sensitive opt-out
@@ -58,9 +57,9 @@ object Tables {
     nsView(spark.read.parquet(s"$dir/$name.parquet"))
   }
 
-  /** Tables whose scans are spread by default ([[spread]]). Policy, not
-    * mechanism: `documents` carries the opaque text payload — virtually
-    * every consumer runs CPU-heavy per-row work (shingling, hashing,
+  /** Tables whose scans [[apply]] spreads. Policy, not mechanism:
+    * `documents` carries the opaque text payload — virtually every
+    * consumer runs CPU-heavy per-row work (shingling, hashing,
     * winnowing, decode) directly over the scan, where an under-parallel
     * scan serializes the whole map side (measured 2x+ on the winnowing /
     * repetition / contamination heads at sf0.1); `embeddings` is the
@@ -69,38 +68,32 @@ object Tables {
     * q306/q308/q310/q326 fell from ~37 s to ~15 s at sf0.1). Relational
     * and event tables are NOT listed: their queries are exchange-bound,
     * and the extra exchange measurably hurts (the CPU-heavy event sites —
-    * protocol decode, PII redact — opt in explicitly via Q.spreadIfNarrow
-    * instead).
-    * Override with `spark.graft.spreadTables` (comma list, empty = none).
+    * protocol decode, PII redact, the PxL events base — call [[spread]]
+    * themselves).
     */
-  private def spreadTables(spark: SparkSession): Set[String] =
-    spark.conf.get("spark.graft.spreadTables", "documents,embeddings")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
+  private val SpreadTables = Set("documents", "embeddings")
 
-  /** Scale-adaptive scan spread: when a table's on-disk bytes pack into
-    * fewer scan splits than the session has cores (FilePartition packing
-    * is `bytes / maxPartitionBytes`), every downstream per-row expression
-    * runs on that handful of tasks — a single-row-group fixture parquet
-    * executes the whole map side of a query on ONE core of 32. A
-    * round-robin repartition to core count immediately after the scan
-    * costs one exchange of the (by definition small) table and unlocks
-    * full parallelism for the shingling/hashing/decode work above it.
-    *
-    * Scale contract: the trigger is the measured file size, not a tuned
-    * constant — at production scale `scanPartitions >= cores` and this is
-    * a no-op, so no fact table is ever gratuitously shuffled. Tables under
-    * `spark.graft.spreadMinBytes` (default 48k) stay single-task: their
+  /** Files under this size stay single-task even when narrow: their
     * per-row work cannot dominate, and the exchange would be pure
-    * overhead on dimension-table lookups. Filters and column pruning
-    * still reach the scan (PushPredicateThroughNonJoin / ColumnPruning
-    * traverse Repartition; pinned by PlanSpec), and results are
-    * partitioning-invariant by the repo's engine-exactness contract.
+    * overhead on dimension-table lookups.
     */
-  private[graft] def spread(spark: SparkSession, df: DataFrame,
-                            path: String): DataFrame = {
-    val minBytes = spark.conf.get("spark.graft.spreadMinBytes", "49152").toLong
-    if (minBytes < 0) return df
-    val cores = spark.sparkContext.defaultParallelism
+  private val SpreadMinBytes = 49152L
+
+  /** The one scan-spread decision: true iff the source is at least
+    * [[SpreadMinBytes]] on disk and its bytes pack into fewer scan splits
+    * than the session has cores (FilePartition packing is
+    * `bytes / maxPartitionBytes`) — a single-row-group fixture parquet
+    * otherwise executes the whole map side of a query on ONE core.
+    *
+    * The signal is STATIC — the file's on-disk size, not
+    * `df.rdd.getNumPartitions`, which would force an eager physical
+    * planning of the frame and sidestep AQE. A directory-layout dataset
+    * is sized by summing its direct child files (a dirent stat would
+    * report ~4 KB); an unstat-able path (object stores, globs) reports
+    * 0 bytes and is never narrow. At production scale
+    * `scanPartitions >= cores`, so this is always false there.
+    */
+  private[graft] def narrow(spark: SparkSession, path: String): Boolean = {
     val f = new java.io.File(path)
     val bytes =
       if (f.isDirectory)
@@ -110,8 +103,22 @@ object Tables {
     val maxPartBytes = org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
     val scanPartitions = math.max(1L, (bytes + maxPartBytes - 1) / maxPartBytes)
-    if (bytes >= minBytes && scanPartitions < cores) df.repartition(cores) else df
+    bytes >= SpreadMinBytes && scanPartitions < spark.sparkContext.defaultParallelism
   }
+
+  /** Scale-adaptive scan spread: a round-robin repartition to core count
+    * immediately after a [[narrow]] scan costs one exchange of the (by
+    * definition small) table and unlocks full parallelism for the
+    * shingling/hashing/decode work above it; any other frame is returned
+    * as is. Filters and column pruning still reach the scan
+    * (PushPredicateThroughNonJoin / ColumnPruning traverse Repartition;
+    * pinned by PlanSpec), and results are partitioning-invariant by the
+    * repo's engine-exactness contract.
+    */
+  private[graft] def spread(spark: SparkSession, df: DataFrame,
+                            path: String): DataFrame =
+    if (narrow(spark, path)) df.repartition(spark.sparkContext.defaultParallelism)
+    else df
 
   /** int64-ns view of the event-time column. `withColumn` replaces in
     * place, so column order (and every downstream schema expectation) is

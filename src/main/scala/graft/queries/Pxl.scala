@@ -477,22 +477,15 @@ object Pxl {
     // summation order matches DuckDB only at the scan's original
     // row-per-partition layout, so those pass `spreadBase = false` and
     // keep the order-preserving checkpoint alone (still one
-    // evaluation). Gated by narrowScan (at production scale the scan is
-    // already parallel and materializing it wholesale would be wrong —
+    // evaluation). Gated by Tables.narrow (at production scale the scan
+    // is already parallel and materializing it wholesale would be wrong —
     // the base is absent and plans are unchanged). Scoped per env = per
     // query build: nothing is shared across measured queries.
-    // spark.graft.pxlEventsBase=0 disables the base outright (the
-    // production-shape kill switch; PxlSpec uses it to pin the scan
-    // pushdown contract); spark.graft.pxlSpreadBase=0 keeps the
-    // one-evaluation checkpoint but drops the spread (A/B knob).
+    val evPath = s"$dir/events.parquet"
     val evBase: Option[DataFrame] =
-      if (s.conf.get("spark.graft.pxlEventsBase", "1") != "0" &&
-          Q.narrowScan(s, s"$dir/events.parquet")) {
+      if (graft.core.Tables.narrow(s, evPath)) {
         val raw = t(s, dir, "events")
-        val doSpread = spreadBase &&
-          s.conf.get("spark.graft.pxlSpreadBase", "1") != "0"
-        Some((if (doSpread)
-          Q.spreadIfNarrow(s, raw, s"$dir/events.parquet")
+        Some((if (spreadBase) graft.core.Tables.spread(s, raw, evPath)
         else raw).localCheckpoint(false))
       } else None
     val localTabs = new java.util.concurrent.ConcurrentHashMap[
@@ -618,8 +611,7 @@ object Pxl {
     * in a C++ raw string literal — strip the R"( ... )" wrapper).
     */
   lazy val pxviewsSource: String = {
-    val raw = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      s"$RefDir/src/carnot/planner/pxl_lib/pxviews.pxl")), "UTF-8")
+    val raw = readRef(s"$RefDir/src/carnot/planner/pxl_lib/pxviews.pxl")
     raw.linesIterator
       .filterNot(l => l.trim == "R\"(" || l.trim == ")\"").mkString("\n")
   }
@@ -639,18 +631,36 @@ object Pxl {
     */
   val RefDir: String =
     sys.env.getOrElse("SPARK_GRAFT_REF_DIR", "/root/reference")
-  val StatsPxlPath =
-    s"$RefDir/src/pxl_scripts/px/http_request_stats/stats.pxl"
-  val ServiceStatsPxlPath =
-    s"$RefDir/src/pxl_scripts/px/service_stats/service_stats.pxl"
-  val HttpDataPxlPath =
-    s"$RefDir/src/pxl_scripts/px/http_data/data.pxl"
-  val PidMemoryPxlPath =
-    s"$RefDir/src/pxl_scripts/px/pid_memory_usage/usage.pxl"
-  val JvmStatsPxlPath =
-    s"$RefDir/src/pxl_scripts/px/jvm_stats/jvm_stats.pxl"
-  val NamespacesPxlPath =
-    s"$RefDir/src/pxl_scripts/px/namespaces/namespaces.pxl"
+  /** The bundled `px/` script collection every PxL query module reads. */
+  val RefPx = s"$RefDir/src/pxl_scripts/px"
+  val StatsPxlPath = s"$RefPx/http_request_stats/stats.pxl"
+  val ServiceStatsPxlPath = s"$RefPx/service_stats/service_stats.pxl"
+  val HttpDataPxlPath = s"$RefPx/http_data/data.pxl"
+  val PidMemoryPxlPath = s"$RefPx/pid_memory_usage/usage.pxl"
+  val JvmStatsPxlPath = s"$RefPx/jvm_stats/jvm_stats.pxl"
+  val NamespacesPxlPath = s"$RefPx/namespaces/namespaces.pxl"
+
+  /** A reference file that is not on disk: the one failure every
+    * verbatim-script query and spec reports when the checkout is absent.
+    */
+  final class MissingReference(path: String) extends java.io.FileNotFoundException(
+    s"reference file $path not found; SPARK_GRAFT_REF_DIR=" +
+      sys.env.getOrElse("SPARK_GRAFT_REF_DIR", s"<unset> (default $RefDir)"))
+
+  /** The absolute path of a reference file or directory, or a
+    * [[MissingReference]] when it does not exist.
+    */
+  def refPath(path: String): java.nio.file.Path = {
+    val p = java.nio.file.Paths.get(path).toAbsolutePath.normalize
+    if (!java.nio.file.Files.exists(p)) throw new MissingReference(p.toString)
+    p
+  }
+
+  /** The UTF-8 text of a reference script: the one read path for every
+    * verbatim script.
+    */
+  def readRef(path: String): String =
+    new String(java.nio.file.Files.readAllBytes(refPath(path)), "UTF-8")
 
   /** Deterministic "now" for relative start_time strings: the fixture's
     * max event time ceiled to the next µs. Scans bound time_ < now
@@ -799,8 +809,7 @@ object Pxl {
     // The verbatim reference script, end-to-end through parser+runner.
     // now = max event time, so its '-30s' window covers the data tail.
     "q65_pxl_http_stats" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(StatsPxlPath)), "UTF-8")
+      val script = readRef(StatsPxlPath)
       PxlRunner.run(script, env(s, dir, nowNs(s, dir)))("output")
         .orderBy("service")
     }),
@@ -845,8 +854,7 @@ object Pxl {
     // exec_funcs entry point (SURVEY §3 entry 2): svc_let computes the
     // service LET time series; http_code_histogram the status rollup.
     "q73_pxl_svc_let" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(ServiceStatsPxlPath)), "UTF-8")
+      val script = readRef(ServiceStatsPxlPath)
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       PxlRunner.runFunction(script, env(s, dir, now), "svc_let",
           Seq("-45d", "svc-1"))
@@ -854,8 +862,7 @@ object Pxl {
     }),
 
     "q74_pxl_http_code_hist" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(ServiceStatsPxlPath)), "UTF-8")
+      val script = readRef(ServiceStatsPxlPath)
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       PxlRunner.runFunction(script, env(s, dir, now), "http_code_histogram",
           Seq("-45d", "svc-3"))
@@ -867,8 +874,7 @@ object Pxl {
     // with the ''-on-miss contract, script_reference deep links with
     // dict args, head cap — full row-level trace output, hash-checked.
     "q77_pxl_http_data" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(HttpDataPxlPath)), "UTF-8")
+      val script = readRef(HttpDataPxlPath)
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       PxlRunner.runFunction(script, env(s, dir, now), "http_data",
           Seq("-45d", "", "", "1000000"))
@@ -880,8 +886,7 @@ object Pxl {
     // pid/asid scalars, spaced column names. The '-30s' window is the
     // data tail (now pinned to max event time, as q65).
     "q79_pxl_pid_memory" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(PidMemoryPxlPath)), "UTF-8")
+      val script = readRef(PidMemoryPxlPath)
       PxlRunner.run(script, env(s, dir, nowNs(s, dir)))("output")
         .orderBy("pid")
     }),
@@ -890,8 +895,7 @@ object Pxl {
     // max-min per (upid, window), then rolled up per pod — the two-level
     // sharded-by-UPID aggregation the script documents.
     "q80_pxl_jvm_stats" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(JvmStatsPxlPath)), "UTF-8")
+      val script = readRef(JvmStatsPxlPath)
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       PxlRunner.runFunction(script, env(s, dir, now), "jvm_stats",
           Seq("-45d", "", ""))
@@ -902,8 +906,7 @@ object Pxl {
     // (loaded as a module from the reference's pxl_lib): pod/service
     // counts per namespace from pxviews.pod_resource_stats.
     "q82_pxl_namespaces_lib" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(NamespacesPxlPath)), "UTF-8")
+      val script = readRef(NamespacesPxlPath)
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       PxlRunner.runFunction(script, env(s, dir, now), "namespaces_for_cluster",
           Seq("-45d"))
@@ -912,8 +915,7 @@ object Pxl {
 
     // Same script, the per-namespace resource rollup function.
     "q83_pxl_ns_process_stats" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(NamespacesPxlPath)), "UTF-8")
+      val script = readRef(NamespacesPxlPath)
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       PxlRunner.runFunction(script, env(s, dir, now),
           "process_stats_by_namespace", Seq("-45d"))

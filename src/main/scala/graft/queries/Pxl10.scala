@@ -21,9 +21,7 @@ import Q._
   */
 object Pxl10 {
 
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
+  import Pxl.readRef
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -41,39 +39,39 @@ object Pxl10 {
     // mysql_stats latency_histogram: 5ms-binned latency counts over the
     // none-code-filtered table.
     "q178_pxl_mysql_latency_hist" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.MysqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.MysqlStatsPath), Pxl.env(s, dir, nowNs),
           "latency_histogram", Seq("-45d", ""))
         .orderBy("request_latency")),
 
     // mysql_stats summary_mysql_let: whole-window LET summary per
     // source->destination edge, with script_reference deep links.
     "q179_pxl_mysql_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.MysqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.MysqlStatsPath), Pxl.env(s, dir, nowNs),
           "summary_mysql_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("error_rate", canon("error_rate"))
         .orderBy("source", "destination")),
 
     "q180_pxl_redis_latency_hist" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
           "latency_histogram", Seq("-45d", ""))
         .orderBy("request_latency")),
 
     // redis has no failure column: summary is throughput/latency/total.
     "q181_pxl_redis_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
           "summary_redis_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
         .orderBy("source", "destination")),
 
     // redis cmd_timeseries: per-window command throughput.
     "q182_pxl_redis_cmds" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
           "cmd_timeseries", Seq("-45d", ""))
         .orderBy("time_", "req_cmd")),
 
     "q183_pxl_pgsql_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.PgsqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.PgsqlStatsPath), Pxl.env(s, dir, nowNs),
           "summary_pgsql_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
         .orderBy("source", "destination")),
@@ -91,7 +89,7 @@ object Pxl10 {
     // columns keep the scaled 9 dp canon: their true values sit on the
     // count/1e10 grid, never near boundaries.
     "q184_pxl_cql_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.CqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.CqlStatsPath), Pxl.env(s, dir, nowNs),
           "summary_cql_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("error_rate", canon("error_rate"))
@@ -100,7 +98,7 @@ object Pxl10 {
 
     // cql cmd_timeseries: opcode names via px.cql_opcode_name.
     "q185_pxl_cql_cmds" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.CqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.CqlStatsPath), Pxl.env(s, dir, nowNs),
           "cmd_timeseries", Seq("-45d", ""))
         .orderBy("time_", "req_op"))
   )

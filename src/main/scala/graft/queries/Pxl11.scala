@@ -19,15 +19,12 @@ import Q._
   */
 object Pxl11 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val ServiceStatsPath = s"$RefPx/service_stats/service_stats.pxl"
   val PodPath = s"$RefPx/pod/pod.pxl"
   val IpPath = s"$RefPx/ip/ip.pxl"
   val JvmStatsPath = s"$RefPx/jvm_stats/jvm_stats.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -39,14 +36,14 @@ object Pxl11 {
     // service_stats latency_histogram: 50ms bins over the health/ready/
     // unresolved-filtered http latency domain.
     "q186_pxl_svc_latency_hist" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServiceStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServiceStatsPath), Pxl.env(s, dir, nowNs),
           "latency_histogram", Seq("-45d", ""))
         .orderBy("request_latency")),
 
     // incoming/outgoing edge summaries for one svc: windowed LET per
     // (requestor ip, responder svc) then mean rates per edge.
     "q187_pxl_svc_incoming_edges" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServiceStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServiceStatsPath), Pxl.env(s, dir, nowNs),
           "incoming_edges", Seq("-45d", "svc-1"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("bytes_throughput", canon("bytes_throughput"))
@@ -54,7 +51,7 @@ object Pxl11 {
         .orderBy("requestor", "responder")),
 
     "q188_pxl_svc_outgoing_edges" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServiceStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServiceStatsPath), Pxl.env(s, dir, nowNs),
           "outgoing_edges", Seq("-45d", "svc-1"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("bytes_throughput", canon("bytes_throughput"))
@@ -63,7 +60,7 @@ object Pxl11 {
 
     // svc_graph(""): the whole local service map (non-empty endpoints).
     "q189_pxl_svc_graph" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServiceStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServiceStatsPath), Pxl.env(s, dir, nowNs),
           "svc_graph", Seq("-45d", ""))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("bytes_throughput", canon("bytes_throughput"))
@@ -73,7 +70,7 @@ object Pxl11 {
     // pod.pxl processes: distinct (pid, cmdline, upid) for one pod; the
     // binary upid canonicalizes to its string form (q120 convention).
     "q190_pxl_pod_processes" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodPath), Pxl.env(s, dir, nowNs),
           "processes", Seq("-45d", "pod-7-gen1"))
         .withColumn("upid", graft.types.Upid.upidToString(col("upid")))
         .orderBy("pid", "upid")),
@@ -82,7 +79,7 @@ object Pxl11 {
     // range; the raw ST_QUANTILES JSON is plucked to typed doubles at
     // the gate boundary (float-parity convention).
     "q191_pxl_pod_inbound_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodPath), Pxl.env(s, dir, nowNs),
           "inbound_let_summary", Seq("-45d", "pod-7-gen1"))
         .withColumn("latency_p50",
           get_json_object(col("latency"), "$.p50").cast("double"))
@@ -94,7 +91,7 @@ object Pxl11 {
     // ip.pxl ip_info: global byte-rate rollup + the metadata identity of
     // the IP (all lookups miss for a non-pod IP -> '' contract).
     "q192_pxl_ip_info" -> ((s, dir) =>
-      PxlRunner.runFunction(script(IpPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(IpPath), Pxl.env(s, dir, nowNs),
           "ip_info", Seq("-45d", "10.9.7.7"))
         .withColumn("bytes_per_s_from_ip", round(col("bytes_per_s_from_ip"), 9))
         .withColumn("bytes_per_s_to_ip", round(col("bytes_per_s_to_ip"), 9))),
@@ -102,7 +99,7 @@ object Pxl11 {
     // jvm_stats cmd_pod_table: distinct (pod, cmdline) via
     // px.upid_to_cmdline over the node/pod-filtered jvm table.
     "q193_pxl_jvm_pods" -> ((s, dir) =>
-      PxlRunner.runFunction(script(JvmStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(JvmStatsPath), Pxl.env(s, dir, nowNs),
           "cmd_pod_table", Seq("-45d", "", ""))
         .orderBy("pod"))
   )

@@ -19,12 +19,9 @@ import Q._
   */
 object Pxl12 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
-  val TracepointsPath = s"$RefPx/tracepoint_status/tracepoint_status.pxl"
+  import Pxl.{RefPx, readRef}
 
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
+  val TracepointsPath = s"$RefPx/tracepoint_status/tracepoint_status.pxl"
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -36,46 +33,46 @@ object Pxl12 {
     // cql_stats latency_histogram: 50ms bins over all cql traffic (pod
     // filter '' matches every pod; fixture pods are never empty).
     "q194_pxl_cql_latency_hist" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.CqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.CqlStatsPath), Pxl.env(s, dir, nowNs),
           "latency_histogram", Seq("-45d", ""))
         .orderBy("request_latency")),
 
     // pgsql_stats latency_histogram: 50ms bins after the source/dest
     // formatting (contains '' passes every edge).
     "q195_pxl_pgsql_latency_hist" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.PgsqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.PgsqlStatsPath), Pxl.env(s, dir, nowNs),
           "latency_histogram", Seq("-45d", ""))
         .orderBy("request_latency")),
 
     // pod_edge_stats latency_histogram: RAW (unbinned) latency counts
     // over the pod-7-gen1 self edge.
     "q196_pxl_pod_edge_latency_hist" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl8.PodEdgePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl8.PodEdgePath), Pxl.env(s, dir, nowNs),
           "latency_histogram", Seq("-45d", "pod-7-gen1", "pod-7-gen1"))
         .orderBy("request_latency")),
 
     // The four flow-graph summaries: per-edge means of the per-window
     // floored quantile longs + deep-linked endpoints.
     "q197_pxl_mysql_summary_links" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.MysqlFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.MysqlFlowPath), Pxl.env(s, dir, nowNs),
           "mysql_summary_with_links", Seq("-45d", "ns1", "", ""))
         .withColumn("request_throughput", canon("request_throughput"))
         .orderBy("source", "destination")),
 
     "q198_pxl_pgsql_summary_links" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.PgsqlFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.PgsqlFlowPath), Pxl.env(s, dir, nowNs),
           "pgsql_summary_with_links", Seq("-45d", "ns0", "", ""))
         .withColumn("request_throughput", canon("request_throughput"))
         .orderBy("source", "destination")),
 
     "q199_pxl_cql_summary_links" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.CqlFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.CqlFlowPath), Pxl.env(s, dir, nowNs),
           "cql_summary_with_links", Seq("-45d", "ns2", "", ""))
         .withColumn("request_throughput", canon("request_throughput"))
         .orderBy("source", "destination")),
 
     "q200_pxl_redis_summary_links" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.RedisFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.RedisFlowPath), Pxl.env(s, dir, nowNs),
           "redis_summary_with_links", Seq("-45d", "ns1", "", ""))
         .withColumn("request_throughput", canon("request_throughput"))
         .orderBy("source", "destination")),
@@ -83,7 +80,7 @@ object Pxl12 {
     // sql_queries summary_sql_let: whole-range per-normalized-query
     // rollup with px/sql_query deep links.
     "q201_pxl_sql_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl7.SqlQueriesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl7.SqlQueriesPath), Pxl.env(s, dir, nowNs),
           "summary_sql_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
         .orderBy("normed_query")),
@@ -91,7 +88,7 @@ object Pxl12 {
     // sql_query summary_sql_let: same rollup keyed (query, params) —
     // no deep links in this variant.
     "q202_pxl_sql_query_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl7.SqlQueryPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl7.SqlQueryPath), Pxl.env(s, dir, nowNs),
           "summary_sql_let",
           Seq("-45d", "pod", "SELECT * FROM rel3 WHERE id=$1"))
         .withColumn("request_throughput", canon("request_throughput"))
@@ -100,7 +97,7 @@ object Pxl12 {
     // tracepoint_status tracepoint_info: the unfiltered UDTF — no
     // dynamic tracepoints deployed, so a 0-row schema round-trip.
     "q203_pxl_tracepoint_info" -> ((s, dir) =>
-      PxlRunner.runFunction(script(TracepointsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(TracepointsPath), Pxl.env(s, dir, nowNs),
           "tracepoint_info", Seq()))
   )
 

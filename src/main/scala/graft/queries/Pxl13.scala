@@ -19,16 +19,13 @@ import Q._
   */
 object Pxl13 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val KafkaOverviewPath = s"$RefPx/kafka_overview/kafka_overview.pxl"
   val KafkaPCLatencyPath =
     s"$RefPx/kafka_producer_consumer_latency/kafka_producer_consumer_latency.pxl"
   val KafkaRebalPath =
     s"$RefPx/kafka_consumer_rebalancing/kafka_consumer_rebalancing.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -38,42 +35,42 @@ object Pxl13 {
     // amqp_average_stats: Content Header frames only; body_size plucks
     // an absent field -> 0 (PluckAsInt64UDF contract).
     "q204_pxl_amqp_avg_stats" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.AmqpDataPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.AmqpDataPath), Pxl.env(s, dir, nowNs),
           "amqp_average_stats", Seq("-45d", "", ""))),
 
     // amqp producer/consumer pod lists: BasicPublish req / BasicDeliver
     // resp groups with plucked routing keys.
     "q205_pxl_amqp_producers" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.AmqpDataPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.AmqpDataPath), Pxl.env(s, dir, nowNs),
           "amqp_producer_pod_list", Seq("-45d", "", ""))
         .orderBy("pod", "source")),
 
     "q206_pxl_amqp_consumers" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.AmqpDataPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.AmqpDataPath), Pxl.env(s, dir, nowNs),
           "amqp_consumer_pod_list", Seq("-45d", "", ""))
         .orderBy("pod", "source")),
 
     // amqp_flow_graph: producer pod->queue edges appended with
     // queue->consumer pod edges.
     "q207_pxl_amqp_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl4.AmqpDataPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl4.AmqpDataPath), Pxl.env(s, dir, nowNs),
           "amqp_flow_graph", Seq("-45d", "", "", ""))
         .orderBy("src", "dest")),
 
     // kafka_overview brokers: produce/fetch throughput + byte totals
     // per (deep-linked) broker pod, 4 inner merges on the linked key.
     "q208_pxl_kafka_brokers" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
           "kafka_brokers", Seq("-45d", "", ""))
         .orderBy("pod")),
 
     "q209_pxl_kafka_ov_producers" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
           "kafka_producers", Seq("-45d", "", ""))
         .orderBy("pod")),
 
     "q210_pxl_kafka_ov_consumers" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
           "kafka_consumers", Seq("-45d", "", ""))
         .orderBy("pod")),
 
@@ -81,7 +78,7 @@ object Pxl13 {
     // produce record (70 ≡ 0 mod 5 -> remote always unresolved), so the
     // graph is the fetch self-edges with windowed quantile means.
     "q211_pxl_kafka_pods_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
           "kafka_pods_flow_graph", Seq("-45d", "", ""))
         .withColumn("request_throughput",
           round(col("request_throughput") * 1e10, 9) / 1e10)
@@ -91,20 +88,20 @@ object Pxl13 {
     // always hit the '-' endpoint filter (5 | 70) -> 0-row schema
     // round-trip.
     "q212_pxl_kafka_pc_producers" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaPCLatencyPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaPCLatencyPath), Pxl.env(s, dir, nowNs),
           "kafka_producers", Seq("-45d", "ns1", "t1"))),
 
     // kafka_data: the offset join plucks fetch_offset/base_offset fields
     // the synth bodies don't carry -> both sides empty -> 0-row schema
     // round-trip through the full unnest+join pipeline.
     "q213_pxl_kafka_pc_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaPCLatencyPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaPCLatencyPath), Pxl.env(s, dir, nowNs),
           "kafka_data", Seq("-45d", "ns1", "", "", "t1"))),
 
     // kafka_join_sync_group_events: the raw join/sync stream filtered to
     // one consumer group by the plucked group_id.
     "q214_pxl_kafka_rebal_events" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaRebalPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaRebalPath), Pxl.env(s, dir, nowNs),
           "kafka_join_sync_group_events", Seq("-45d", "cg-1"))
         .orderBy("time_"))
   )

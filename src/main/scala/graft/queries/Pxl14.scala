@@ -17,13 +17,10 @@ import Q._
   */
 object Pxl14 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val PodsPath = s"$RefPx/pods/pods.pxl"
   val ServicePath = s"$RefPx/service/service.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -35,34 +32,34 @@ object Pxl14 {
     // pod.pxl inbound_latency_timeseries: per-10s floored quantiles over
     // pod-7-gen1's inbound (server-traced) non-health traffic.
     "q215_pxl_pod_latency_ts" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl11.PodPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl11.PodPath), Pxl.env(s, dir, nowNs),
           "inbound_latency_timeseries", Seq("-45d", "pod-7-gen1"))
         .orderBy("time_")),
 
     // pod.pxl inbound_request_timeseries_by_container.
     "q216_pxl_pod_container_ts" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl11.PodPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl11.PodPath), Pxl.env(s, dir, nowNs),
           "inbound_request_timeseries_by_container", Seq("-45d", "pod-7-gen1"))
         .orderBy("time_")),
 
     // pod.pxl stacktraces: interval-merged flamegraph for one pod with
     // container/cmdline ctx and percent-of-pod.
     "q217_pxl_pod_stacktraces" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl11.PodPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl11.PodPath), Pxl.env(s, dir, nowNs),
           "stacktraces", Seq("-45d", "pod-7-gen1"))
         .orderBy("stack_trace_id")),
 
     // pod_edge_stats http_requests_formatted: the row-level request view
     // of the pod-7-gen1 self edge.
     "q218_pxl_pod_edge_requests" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl8.PodEdgePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl8.PodEdgePath), Pxl.env(s, dir, nowNs),
           "http_requests_formatted", Seq("-45d", "pod-7-gen1", "pod-7-gen1"))
         .orderBy("timestamp", "req_body")),
 
     // service_edge_stats summary_edge_let: whole-window means of the
     // svc-1 self-edge LET windows (q167's shape, q187's summary math).
     "q219_pxl_svc_edge_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(Pxl8.SvcEdgePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(Pxl8.SvcEdgePath), Pxl.env(s, dir, nowNs),
           "summary_edge_let", Seq("-45d", "svc-1", "svc-1"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("bytes_throughput", canon("bytes_throughput"))
@@ -72,7 +69,7 @@ object Pxl14 {
     // service.pxl inbound_let_summary: per requesting-ip rollup for one
     // service; the quantiles JSON plucks to typed doubles at the gate.
     "q220_pxl_service_inbound_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServicePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServicePath), Pxl.env(s, dir, nowNs),
           "inbound_let_summary", Seq("-45d", "svc-1"))
         .withColumn("latency_p50",
           get_json_object(col("latency"), "$.p50").cast("double"))
@@ -85,7 +82,7 @@ object Pxl14 {
     // error_rate is a mean of window means (engine-order ulp noise), so
     // both sides round at 6 dp.
     "q221_pxl_pods_inbound_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodsPath), Pxl.env(s, dir, nowNs),
           "inbound_let_summary", Seq("-45d", "ns1"))
         .withColumn("latency_p50",
           get_json_object(col("latency"), "$.p50").cast("double"))

@@ -21,15 +21,12 @@ import Q._
   */
 object Pxl15 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val ServicesPath = s"$RefPx/services/services.pxl"
   val NamespacePath = s"$RefPx/namespace/namespace.pxl"
   val ClusterPath = s"$RefPx/cluster/cluster.pxl"
   val HeapsPath = s"$RefPx/collect_agent_heaps/collect_agent_heaps.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -42,7 +39,7 @@ object Pxl15 {
     // services.pxl inbound_let_summary: requesting-entity rollup with
     // window-mean throughputs (canon) and a single-agg error rate.
     "q222_pxl_services_inbound_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServicesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServicesPath), Pxl.env(s, dir, nowNs),
           "inbound_let_summary", Seq("-45d", "ns1"))
         .withColumn("latency_p50",
           get_json_object(col("latency"), "$.p50").cast("double"))
@@ -57,7 +54,7 @@ object Pxl15 {
     // services.pxl inbound_let_service_graph: both trace roles windowed
     // per (svc, remote, pod, role), collapsed to pod-pair edges.
     "q223_pxl_services_let_graph" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServicesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServicesPath), Pxl.env(s, dir, nowNs),
           "inbound_let_service_graph", Seq("-45d", "ns1"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("inbound_throughput", canon("inbound_throughput"))
@@ -67,7 +64,7 @@ object Pxl15 {
 
     // namespace.pxl inbound_service_let_graph: same body, same oracle.
     "q224_pxl_namespace_let_graph" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NamespacePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NamespacePath), Pxl.env(s, dir, nowNs),
           "inbound_service_let_graph", Seq("-45d", "ns1"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("inbound_throughput", canon("inbound_throughput"))
@@ -80,7 +77,7 @@ object Pxl15 {
     // across (pod, requestor) quantile sketches — arbitrary by contract
     // (collections.h:79-96), so the gate drops that one column.
     "q225_pxl_cluster_services" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ClusterPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ClusterPath), Pxl.env(s, dir, nowNs),
           "services_for_cluster", Seq("-45d"))
         .drop("http_latency_in")
         .orderBy("service")),
@@ -88,14 +85,14 @@ object Pxl15 {
     // cluster.pxl service_let_graph: pxviews.http_graph edges with
     // whole-window rates (single divisions — exact).
     "q226_pxl_cluster_let_graph" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ClusterPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ClusterPath), Pxl.env(s, dir, nowNs),
           "service_let_graph", Seq("-45d"))
         .orderBy("responder_pod", "requestor_pod")),
 
     // collect_agent_heaps collect_pprofs: agent catalog × heap-growth
     // stacks, the agent ip resolved to its node through ip->pod->node.
     "q227_pxl_collect_pprofs" -> ((s, dir) =>
-      PxlRunner.runFunction(script(HeapsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(HeapsPath), Pxl.env(s, dir, nowNs),
           "collect_pprofs", Seq("1"))
         .orderBy("heap"))
   )

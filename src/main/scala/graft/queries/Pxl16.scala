@@ -24,15 +24,12 @@ import Q._
   */
 object Pxl16 {
 
-  private val RefScripts = s"${Pxl.RefDir}/src/pxl_scripts"
-  val EndpointsPath = s"$RefScripts/pxbeta/service_endpoints/service_endpoints.pxl"
-  val EndpointPath = s"$RefScripts/pxbeta/service_endpoint/service_endpoint.pxl"
-  val DnsFilteredPath = s"$RefScripts/sotw/dns_queries_filtered/data.pxl"
-  val FqdnListPath = s"$RefScripts/sotw/dns_external_fqdn_list/data.pxl"
+  import Pxl.readRef
 
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
+  val EndpointsPath = s"${Pxl.RefDir}/src/pxl_scripts/pxbeta/service_endpoints/service_endpoints.pxl"
+  val EndpointPath = s"${Pxl.RefDir}/src/pxl_scripts/pxbeta/service_endpoint/service_endpoint.pxl"
+  val DnsFilteredPath = s"${Pxl.RefDir}/src/pxl_scripts/sotw/dns_queries_filtered/data.pxl"
+  val FqdnListPath = s"${Pxl.RefDir}/src/pxl_scripts/sotw/dns_external_fqdn_list/data.pxl"
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -42,20 +39,20 @@ object Pxl16 {
     // service_endpoints endpoints: the clustered endpoint catalog with
     // pxbeta/service_endpoint deep links.
     "q228_pxl_endpoints_list" -> ((s, dir) =>
-      PxlRunner.runFunction(script(EndpointsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(EndpointsPath), Pxl.env(s, dir, nowNs),
           "endpoints", Seq("-45d", "svc-1"))
         .orderBy("endpoint")),
 
     // service_endpoints endpoint_let: windowed LET per endpoint.
     "q229_pxl_endpoints_let" -> ((s, dir) =>
-      PxlRunner.runFunction(script(EndpointsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(EndpointsPath), Pxl.env(s, dir, nowNs),
           "endpoint_let", Seq("-45d", "svc-1"))
         .orderBy("time_", "endpoint")),
 
     // service_endpoint endpoint_let_timeseries: one endpoint template
     // matched via px._match_endpoint.
     "q230_pxl_endpoint_let_ts" -> ((s, dir) =>
-      PxlRunner.runFunction(script(EndpointPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(EndpointPath), Pxl.env(s, dir, nowNs),
           "endpoint_let_timeseries",
           Seq("-45d", "svc-1", "/api/v1/users/*"))
         .orderBy("time_")),
@@ -63,7 +60,7 @@ object Pxl16 {
     // service_endpoint endpoint_slow_requests: p99 tail of the matched
     // endpoint with linked sources (head cap not binding at sf0.01).
     "q231_pxl_endpoint_slow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(EndpointPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(EndpointPath), Pxl.env(s, dir, nowNs),
           "endpoint_slow_requests",
           Seq("-45d", "svc-1", "/api/v1/users/*"))
         .orderBy("time_", "req_body")),
@@ -72,7 +69,7 @@ object Pxl16 {
     // the single-query bodies have no ',' so the parsed name is ''
     // (SubstringUDF returns '' for a negative length — string_ops.h:83).
     "q232_pxl_dns_filtered" -> ((s, dir) =>
-      PxlRunner.runFunction(script(DnsFilteredPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(DnsFilteredPath), Pxl.env(s, dir, nowNs),
           "dns_requests", Seq("-45d", ""))
         .withColumn("latency_p50",
           get_json_object(col("latency"), "$.p50").cast("double"))
@@ -91,7 +88,7 @@ object Pxl16 {
     // fqdn is '' (negative-length substring contract), which passes the
     // '.local' filters -> one ('', link, count-of-resolved) group.
     "q233_pxl_fqdn_list" -> ((s, dir) =>
-      PxlRunner.runFunction(script(FqdnListPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(FqdnListPath), Pxl.env(s, dir, nowNs),
           "fqdn_list", Seq("-45d")))
   )
 

@@ -19,7 +19,8 @@ import Q._
   */
 object Pxl2 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val PodsPxlPath = s"$RefPx/pods/pods.pxl"
   val ServicePxlPath = s"$RefPx/service/service.pxl"
   val ClusterPxlPath = s"$RefPx/cluster/cluster.pxl"
@@ -34,10 +35,6 @@ object Pxl2 {
   val NatsDataPxlPath = s"$RefPx/nats_data/nats_data.pxl"
   val KafkaDataPxlPath = s"$RefPx/kafka_data/kafka_data.pxl"
 
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
   private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
@@ -47,91 +44,91 @@ object Pxl2 {
     // status metadata scalars; ctx['namespace'] compared INSIDE a filter
     // (the ConvertMetadataRule in-place expansion path).
     "q84_pxl_pods_list" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodsPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodsPxlPath), Pxl.env(s, dir, nowNs),
           "pods", Seq("-45d", "ns1"))
         .orderBy("pod")),
 
     // pods.pxl `resource_timeseries`: the two-level (upid, pod, window)
     // counter rollup.
     "q85_pxl_pods_resource" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodsPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodsPxlPath), Pxl.env(s, dir, nowNs),
           "resource_timeseries", Seq("-45d", "ns1"))
         .orderBy("pod", "time_")),
 
     // pods.pxl `inbound_let_timeseries`: HTTP LET per (pod, 10s window).
     "q86_pxl_pods_inbound" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodsPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodsPxlPath), Pxl.env(s, dir, nowNs),
           "inbound_let_timeseries", Seq("-45d", "ns1"))
         .orderBy("time_", "pod")),
 
     // service.pxl `pods_for_service`: px.has_service_name over a ctx
     // property in a filter.
     "q87_pxl_service_pods" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServicePxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServicePxlPath), Pxl.env(s, dir, nowNs),
           "pods_for_service", Seq("-45d", "svc-1"))
         .orderBy("pod")),
 
     // service.pxl `inbound_let_timeseries`: single-key window rollup with
     // errors_per_ns derived series.
     "q88_pxl_service_let_ts" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServicePxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServicePxlPath), Pxl.env(s, dir, nowNs),
           "inbound_let_timeseries", Seq("-45d", "svc-1"))
         .orderBy("time_")),
 
     // service.pxl `service_slow_requests`: p99 threshold self-join then
     // row-level trace of the slow tail (head cap not binding at sf0.01).
     "q89_pxl_service_slow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServicePxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServicePxlPath), Pxl.env(s, dir, nowNs),
           "service_slow_requests", Seq("-45d", "svc-1"))
         .orderBy("time_", "req_body")),
 
     // cluster.pxl `nodes_for_cluster` through the REAL pxviews module:
     // px.now() + px.parse_duration(...) numeric start_time.
     "q90_pxl_cluster_nodes" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ClusterPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ClusterPxlPath), Pxl.env(s, dir, nowNs),
           "nodes_for_cluster", Seq("-45d"))
         .orderBy("node")),
 
     // cluster.pxl `pods_for_cluster` (pxviews.pod_resource_stats).
     "q91_pxl_cluster_pods" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ClusterPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ClusterPxlPath), Pxl.env(s, dir, nowNs),
           "pods_for_cluster", Seq("-45d"))
         .orderBy("pod")),
 
     // cluster.pxl `namespaces_for_cluster` (container_process_summary
     // rollup + two pod/service count merges).
     "q92_pxl_cluster_ns" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ClusterPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ClusterPxlPath), Pxl.env(s, dir, nowNs),
           "namespaces_for_cluster", Seq("-45d"))
         .orderBy("namespace")),
 
     // dns_data/data.pxl `dns_data`: full row-level DNS trace with the
     // ip->pod fallback chain and script_reference deep links.
     "q93_pxl_dns_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(DnsDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(DnsDataPxlPath), Pxl.env(s, dir, nowNs),
           "dns_data", Seq("-45d", "", "", "1000000"))
         .orderBy("time_", "req_body")),
 
     // pod.pxl — the single-pod drill-down script, one entry per function.
     "q96_pxl_pod_containers" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodPxlPath), Pxl.env(s, dir, nowNs),
           "containers", Seq("-45d", "pod-7-gen1"))
         .orderBy("name")),
 
     "q97_pxl_pod_node" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodPxlPath), Pxl.env(s, dir, nowNs),
           "node", Seq("-45d", "pod-7-gen1"))
         .orderBy("node")),
 
     // (pod.pxl `processes` emits the raw binary upid column, which the
     // oracle hash cannot represent — it is exercised by PxlSpec instead.)
     "q99_pxl_pod_resource" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodPxlPath), Pxl.env(s, dir, nowNs),
           "resource_timeseries", Seq("-45d", "pod-7-gen1"))
         .orderBy("time_")),
 
     "q100_pxl_pod_network" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodPxlPath), Pxl.env(s, dir, nowNs),
           "network_timeseries", Seq("-45d", "pod-7-gen1"))
         .orderBy("time_")),
 
@@ -139,42 +136,42 @@ object Pxl2 {
     // row-level trace output (same add_source_dest/deep-link chain as
     // dns_data over its own stirling table).
     "q101_pxl_mysql_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(MysqlDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(MysqlDataPxlPath), Pxl.env(s, dir, nowNs),
           "mysql_data", Seq("-45d", "", "", "1000000"))
         .orderBy("time_", "resp_body")),
 
     "q102_pxl_redis_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(RedisDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(RedisDataPxlPath), Pxl.env(s, dir, nowNs),
           "redis_data", Seq("-45d", "", "", "1000000"))
         .orderBy("time_", "req_args")),
 
     "q103_pxl_pgsql_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PgsqlDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PgsqlDataPxlPath), Pxl.env(s, dir, nowNs),
           "pgsql_data", Seq("-45d", "", "", "1000000"))
         .orderBy("time_", "resp")),
 
     "q104_pxl_mongodb_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(MongodbDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(MongodbDataPxlPath), Pxl.env(s, dir, nowNs),
           "mongodb_data", Seq("-45d", "", "", "1000000"))
         .orderBy("time_", "req_body")),
 
     "q105_pxl_cql_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(CqlDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(CqlDataPxlPath), Pxl.env(s, dir, nowNs),
           "cql_data", Seq("-45d", "", "", "1000000"))
         .orderBy("time_", "resp_body")),
 
     "q106_pxl_mux_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(MuxDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(MuxDataPxlPath), Pxl.env(s, dir, nowNs),
           "mux_data", Seq("-45d", "1000000"))
         .orderBy("time_", "req_name")),
 
     "q107_pxl_nats_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NatsDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NatsDataPxlPath), Pxl.env(s, dir, nowNs),
           "nats_data", Seq("-45d", "", "", "1000000"))
         .orderBy("time_", "body")),
 
     "q108_pxl_kafka_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaDataPxlPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaDataPxlPath), Pxl.env(s, dir, nowNs),
           "kafka_data", Seq("-45d", "", "", "1000000"))
         .orderBy("time_", "req_body"))
   )

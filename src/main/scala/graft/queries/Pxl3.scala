@@ -19,7 +19,8 @@ import Q._
   */
 object Pxl3 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val AgentStatusPath = s"$RefPx/agent_status/agent_status.pxl"
   val SchemasPath = s"$RefPx/schemas/schemas.pxl"
   val FuncsPath = s"$RefPx/funcs/funcs.pxl"
@@ -29,10 +30,6 @@ object Pxl3 {
   val HttpPostPath = s"$RefPx/http_post_requests/data.pxl"
   val UpidsPath = s"$RefPx/upids/upids.pxl"
 
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
   private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
@@ -40,29 +37,29 @@ object Pxl3 {
   val queries: Map[String, QFn] = Map(
     // agent_status.pxl: top-level px.display(px.GetAgentStatus()).
     "q109_pxl_agent_status" -> ((s, dir) =>
-      PxlRunner.run(script(AgentStatusPath), Pxl.env(s, dir, nowNs))("output")),
+      PxlRunner.run(readRef(AgentStatusPath), Pxl.env(s, dir, nowNs))("output")),
 
     // schemas.pxl `table_desc` / `table_schema`: the datasource catalog.
     "q110_pxl_schemas_tables" -> ((s, dir) =>
-      PxlRunner.runFunction(script(SchemasPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(SchemasPath), Pxl.env(s, dir, nowNs),
           "table_desc", Seq())
         .orderBy("table_name")),
     "q111_pxl_schemas_cols" -> ((s, dir) =>
-      PxlRunner.runFunction(script(SchemasPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(SchemasPath), Pxl.env(s, dir, nowNs),
           "table_schema", Seq())
         .orderBy("table_name", "column_index")),
 
     // funcs.pxl: the registered scalar/aggregate/table function surface.
     "q112_pxl_funcs_udf" -> ((s, dir) =>
-      PxlRunner.runFunction(script(FuncsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(FuncsPath), Pxl.env(s, dir, nowNs),
           "map_funcs", Seq())
         .orderBy("name")),
     "q113_pxl_funcs_uda" -> ((s, dir) =>
-      PxlRunner.runFunction(script(FuncsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(FuncsPath), Pxl.env(s, dir, nowNs),
           "agg_funcs", Seq())
         .orderBy("name")),
     "q114_pxl_funcs_udtf" -> ((s, dir) =>
-      PxlRunner.runFunction(script(FuncsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(FuncsPath), Pxl.env(s, dir, nowNs),
           "table_funcs", Seq())
         .orderBy("name")),
 
@@ -70,17 +67,17 @@ object Pxl3 {
     // no dynamic tracepoints are deployed, so this checks the 0-row
     // schema round-trip (q78 convention) INCLUDING the filter pushback.
     "q115_pxl_tracepoints" -> ((s, dir) =>
-      PxlRunner.runFunction(script(TracepointsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(TracepointsPath), Pxl.env(s, dir, nowNs),
           "running_tracepoints", Seq())),
 
     // stirling_errors.pxl `stirling_error` / `probe_status`: node-scoped
     // diagnostics with ctx['node'] resolution and a contains filter.
     "q116_pxl_stirling_error" -> ((s, dir) =>
-      PxlRunner.runFunction(script(StirlingErrorsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(StirlingErrorsPath), Pxl.env(s, dir, nowNs),
           "stirling_error", Seq("-45d", "", "1000000"))
         .orderBy("time_", "error")),
     "q117_pxl_probe_status" -> ((s, dir) =>
-      PxlRunner.runFunction(script(StirlingErrorsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(StirlingErrorsPath), Pxl.env(s, dir, nowNs),
           "probe_status", Seq("-45d", "", "1000000"))
         .orderBy("time_", "error")),
 
@@ -88,7 +85,7 @@ object Pxl3 {
     // three contains filters; status 200 keeps the row count under the
     // script's own head cap so the limit never binds.
     "q118_pxl_http_filtered" -> ((s, dir) =>
-      PxlRunner.runFunction(script(HttpFilteredPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(HttpFilteredPath), Pxl.env(s, dir, nowNs),
           "http_data", Seq("-45d", "", "", "", "200"))
         .orderBy("time_")),
 
@@ -96,7 +93,7 @@ object Pxl3 {
     // '-30s' window — empty at the fixture's frozen now, so this gates
     // the schema round-trip of the whole map/ctx/filter chain.
     "q119_pxl_http_post" -> ((s, dir) =>
-      PxlRunner.run(script(HttpPostPath), Pxl.env(s, dir, nowNs))("output")),
+      PxlRunner.run(readRef(HttpPostPath), Pxl.env(s, dir, nowNs))("output")),
 
     // upids.pxl `upids_for_namespace`: groupby over the raw binary upid.
     // The script runs verbatim; the gate canonicalizes the upid column to
@@ -104,7 +101,7 @@ object Pxl3 {
     // represent a 16-byte binary (same reason pod.pxl `processes` is
     // spec-gated) — values are still fully checked.
     "q120_pxl_upids" -> ((s, dir) =>
-      PxlRunner.runFunction(script(UpidsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(UpidsPath), Pxl.env(s, dir, nowNs),
           "upids_for_namespace", Seq("-45d", "ns1"))
         .withColumn("upid", graft.types.Upid.upidToString(col("upid")))
         .orderBy("upid"))

@@ -23,7 +23,8 @@ import Q._
   */
 object Pxl4 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val NetFlowPath = s"$RefPx/net_flow_graph/net_flow_graph.pxl"
   val DnsFlowPath = s"$RefPx/dns_flow_graph/dns_flow_graph.pxl"
   val MysqlFlowPath = s"$RefPx/mysql_flow_graph/mysql_flow_graph.pxl"
@@ -37,10 +38,6 @@ object Pxl4 {
   val KafkaOverviewPath = s"$RefPx/kafka_overview/kafka_overview.pxl"
   val AmqpDataPath = s"$RefPx/amqp_data/amqp_data.pxl"
   val FlamegraphPath = s"$RefPx/perf_flamegraph/flamegraph.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -63,7 +60,7 @@ object Pxl4 {
     // global time-window agg joined back via join_key, rate filter with
     // a float exec arg.
     "q121_pxl_net_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NetFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NetFlowPath), Pxl.env(s, dir, nowNs),
           "net_flow_graph", Seq("-45d", "ns1", "", "", "0"))
         .orderBy("from_entity", "to_entity")),
 
@@ -74,7 +71,7 @@ object Pxl4 {
     // whose summation order must match the oracle's scan order (see
     // Pxl.env) — the one-evaluation checkpoint still applies.
     "q122_pxl_dns_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(DnsFlowPath),
+      PxlRunner.runFunction(readRef(DnsFlowPath),
           Pxl.env(s, dir, nowNs, spreadBase = false),
           "dns_flow_graph", Seq("-45d", "", ""))
         .orderBy("from_entity", "to_entity")),
@@ -83,42 +80,42 @@ object Pxl4 {
     // the ip->pod chain, 10s LET windows with latency quantiles, then a
     // per-edge rollup of the window series.
     "q123_pxl_mysql_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(MysqlFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(MysqlFlowPath), Pxl.env(s, dir, nowNs),
           "mysql_flow_graph", Seq("-45d", "ns1", "", ""))
         .withColumn("request_throughput", canonThroughput)
         .orderBy("source", "destination")),
 
     "q124_pxl_pgsql_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PgsqlFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PgsqlFlowPath), Pxl.env(s, dir, nowNs),
           "pgsql_flow_graph", Seq("-45d", "ns0", "", ""))
         .withColumn("request_throughput", canonThroughput)
         .orderBy("source", "destination")),
 
     "q125_pxl_cql_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(CqlFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(CqlFlowPath), Pxl.env(s, dir, nowNs),
           "cql_flow_graph", Seq("-45d", "ns2", "", ""))
         .withColumn("request_throughput", canonThroughput)
         .orderBy("source", "destination")),
 
     "q126_pxl_redis_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(RedisFlowPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(RedisFlowPath), Pxl.env(s, dir, nowNs),
           "redis_flow_graph", Seq("-45d", "ns1", "", ""))
         .withColumn("request_throughput", canonThroughput)
         .orderBy("source", "destination")),
 
     // The protocol stats family (pod LET views).
     "q127_pxl_mysql_stats" -> ((s, dir) =>
-      PxlRunner.runFunction(script(MysqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(MysqlStatsPath), Pxl.env(s, dir, nowNs),
           "pod_mysql_let", Seq("-45d", "pod"))
         .orderBy("time_", "destination")),
 
     "q128_pxl_pgsql_stats" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PgsqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PgsqlStatsPath), Pxl.env(s, dir, nowNs),
           "pod_pgsql_let", Seq("-45d", "pod"))
         .orderBy("time_", "destination")),
 
     "q129_pxl_redis_stats" -> ((s, dir) =>
-      PxlRunner.runFunction(script(RedisStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(RedisStatsPath), Pxl.env(s, dir, nowNs),
           "pod_redis_let", Seq("-45d", "pod"))
         .orderBy("time_", "destination")),
 
@@ -126,7 +123,7 @@ object Pxl4 {
     // quantiles computed over the resp_op != 0 subset — windows whose
     // requests all lack responses carry null latencies.
     "q130_pxl_cql_stats" -> ((s, dir) =>
-      PxlRunner.runFunction(script(CqlStatsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(CqlStatsPath), Pxl.env(s, dir, nowNs),
           "pod_cql_let", Seq("-45d", "pod"))
         .orderBy("time_", "k8s", "`CQL IP`")),
 
@@ -134,12 +131,12 @@ object Pxl4 {
     // (pluck_array 5-way append), producer/consumer edges, scalar time
     // window via keyless merge.
     "q131_pxl_kafka_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
           "kafka_flow_graph", Seq("-45d", "", ""))
         .orderBy("src", "dest")),
 
     "q132_pxl_kafka_topics" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaOverviewPath), Pxl.env(s, dir, nowNs),
           "kafka_topics_overview", Seq("-45d", "", ""))
         .orderBy("topic_name")),
 
@@ -148,13 +145,13 @@ object Pxl4 {
     // ONLY because the oracle hash cannot represent a 16-byte binary
     // (q120 convention) — values are still fully checked.
     "q133_pxl_amqp_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(AmqpDataPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(AmqpDataPath), Pxl.env(s, dir, nowNs),
           "amqp_data", Seq("-45d", "", ""))
         .withColumn("upid", graft.types.Upid.upidToString(col("upid")))
         .orderBy("time_", "upid")),
 
     "q134_pxl_amqp_stats" -> ((s, dir) =>
-      PxlRunner.runFunction(script(AmqpDataPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(AmqpDataPath), Pxl.env(s, dir, nowNs),
           "amqp_msg_stats", Seq("-45d", "", ""))
         .orderBy("frame_name", "req_name")),
 
@@ -162,7 +159,7 @@ object Pxl4 {
     // (sum counts per folded stack) + percent-of-pod via a pre-filter
     // total agg merged back.
     "q135_pxl_flamegraph" -> ((s, dir) =>
-      PxlRunner.runFunction(script(FlamegraphPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(FlamegraphPath), Pxl.env(s, dir, nowNs),
           "stacktraces", Seq("-45d", "", "", "", "pod"))
         .orderBy("pod", "stack_trace_id"))
   )

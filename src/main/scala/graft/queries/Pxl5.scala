@@ -21,7 +21,8 @@ import Q._
   */
 object Pxl5 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val NodesPath = s"$RefPx/nodes/nodes.pxl"
   val NodePath = s"$RefPx/node/node.pxl"
   val NamespacePath = s"$RefPx/namespace/namespace.pxl"
@@ -29,10 +30,6 @@ object Pxl5 {
   val SlowRequestsPath = s"$RefPx/slow_http_requests/slow_http_requests.pxl"
   val InboundConnsPath = s"$RefPx/inbound_conns/data.pxl"
   val OutboundConnsPath = s"$RefPx/outbound_conns/data.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -53,23 +50,23 @@ object Pxl5 {
   val queries: Map[String, QFn] = Map(
     // nodes.pxl: the per-node cluster overview.
     "q136_pxl_nodes_list" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NodesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NodesPath), Pxl.env(s, dir, nowNs),
           "nodes", Seq("-45d"))
         .orderBy("node")),
 
     "q137_pxl_nodes_pods" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NodesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NodesPath), Pxl.env(s, dir, nowNs),
           "pods_by_node", Seq("-45d"))
         .orderBy("node", "pod")),
 
     "q138_pxl_nodes_process" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NodesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NodesPath), Pxl.env(s, dir, nowNs),
           "process_stats", Seq("-45d"))
         .orderBy("node", "time_")),
 
     "q139_pxl_nodes_network" -> ((s, dir) =>
       canonRates(
-        PxlRunner.runFunction(script(NodesPath), Pxl.env(s, dir, nowNs),
+        PxlRunner.runFunction(readRef(NodesPath), Pxl.env(s, dir, nowNs),
           "network_stats", Seq("-45d")),
         "rx_bytes_per_ns", "tx_bytes_per_ns", "rx_drop_per_ns",
         "tx_drops_per_ns", "rx_errors_per_ns", "tx_errors_per_ns")
@@ -78,18 +75,18 @@ object Pxl5 {
     // node.pxl: the single-node drill-down, through the REAL pxviews
     // helper library.
     "q140_pxl_node_pods" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NodePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NodePath), Pxl.env(s, dir, nowNs),
           "pods_for_node", Seq("-45d", "node-2"))
         .orderBy("pod")),
 
     "q141_pxl_node_resource" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NodePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NodePath), Pxl.env(s, dir, nowNs),
           "resource_timeseries", Seq("-45d", "node-2", "pod"))
         .orderBy("time_", "pod")),
 
     "q142_pxl_node_network" -> ((s, dir) =>
       canonRates(
-        PxlRunner.runFunction(script(NodePath), Pxl.env(s, dir, nowNs),
+        PxlRunner.runFunction(readRef(NodePath), Pxl.env(s, dir, nowNs),
           "network_stats", Seq("-45d", "node-2", "pod")),
         "rx_bytes_per_ns", "tx_bytes_per_ns", "rx_drops_per_ns",
         "tx_drops_per_ns", "rx_errors_per_ns", "tx_errors_per_ns")
@@ -98,13 +95,13 @@ object Pxl5 {
     // node.pxl stacktraces: pxviews.stacktraces profile merge +
     // percent-of-node (num_cpus-scaled).
     "q143_pxl_node_flamegraph" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NodePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NodePath), Pxl.env(s, dir, nowNs),
           "stacktraces", Seq("-45d", "host-local"))
         .orderBy("pod", "stack_trace_id")),
 
     // namespace.pxl.
     "q144_pxl_ns_pods" -> ((s, dir) =>
-      PxlRunner.runFunction(script(NamespacePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(NamespacePath), Pxl.env(s, dir, nowNs),
           "pods_for_namespace", Seq("-45d", "ns1"))
         .orderBy("pod")),
 
@@ -116,7 +113,7 @@ object Pxl5 {
     // doubles and round the means; values remain fully checked.
     "q145_pxl_ns_services" -> ((s, dir) =>
       canonRates(
-        PxlRunner.runFunction(script(NamespacePath), Pxl.env(s, dir, nowNs),
+        PxlRunner.runFunction(readRef(NamespacePath), Pxl.env(s, dir, nowNs),
           "services_for_namespace", Seq("-45d", "ns1"))
         .withColumn("latency_p50",
           get_json_object(col("http_latency"), "$.p50").cast("double"))
@@ -129,7 +126,7 @@ object Pxl5 {
 
     "q146_pxl_ns_let_summary" -> ((s, dir) =>
       canonRates(
-        PxlRunner.runFunction(script(NamespacePath), Pxl.env(s, dir, nowNs),
+        PxlRunner.runFunction(readRef(NamespacePath), Pxl.env(s, dir, nowNs),
           "inbound_service_let_summary", Seq("-45d", "ns1"))
         .withColumn("latency_p50",
           get_json_object(col("http_latency"), "$.p50").cast("double"))
@@ -142,12 +139,12 @@ object Pxl5 {
 
     // services.pxl.
     "q147_pxl_services_list" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServicesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServicesPath), Pxl.env(s, dir, nowNs),
           "services", Seq("-45d", "ns1"))
         .orderBy("service")),
 
     "q148_pxl_services_let" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServicesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServicesPath), Pxl.env(s, dir, nowNs),
           "inbound_service_let", Seq("-45d", "ns1"))
         .orderBy("time_", "service")),
 
@@ -155,19 +152,19 @@ object Pxl5 {
     // script's 100ms floor, so this gates the 0-row schema round-trip of
     // the whole ctx/source-dest/p99-self-join chain (q78/q119 convention).
     "q149_pxl_slow_requests" -> ((s, dir) =>
-      PxlRunner.runFunction(script(SlowRequestsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(SlowRequestsPath), Pxl.env(s, dir, nowNs),
           "namespace_slow_requests", Seq("-45d", "ns1"))
         .orderBy("time_")),
 
     // inbound/outbound_conns: conn_stats counter deltas for peers that
     // resolve to no known pod/service.
     "q150_pxl_inbound_conns" -> ((s, dir) =>
-      PxlRunner.runFunction(script(InboundConnsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(InboundConnsPath), Pxl.env(s, dir, nowNs),
           "inbound_conns", Seq("-45d", ""))
         .orderBy("pod", "remote_addr")),
 
     "q151_pxl_outbound_conns" -> ((s, dir) =>
-      PxlRunner.runFunction(script(OutboundConnsPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(OutboundConnsPath), Pxl.env(s, dir, nowNs),
           "outbound_conns", Seq("-45d", ""))
         .orderBy("pod", "remote_addr", "remote_port"))
   )

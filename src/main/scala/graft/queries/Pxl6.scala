@@ -19,17 +19,14 @@ import Q._
   */
 object Pxl6 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val DnsQuerySummaryPath = s"$RefPx/dns_query_summary/dns_query_summary.pxl"
   val NetworkStatsPath = s"$RefPx/network_stats/stats.pxl"
   val ServiceResourcePath = s"$RefPx/service_resource_usage/usage.pxl"
   val PodMemoryPath = s"$RefPx/pod_memory_usage/pod.pxl"
   val MostHttpPath = s"$RefPx/most_http_data/data.pxl"
   val LargestHttpPath = s"$RefPx/largest_http_request/data.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -45,13 +42,13 @@ object Pxl6 {
     // query-name prefix with find/substring, nslookup the resolver, roll
     // up resolution/NXDOMAIN rates per (pod, resolver, prefix).
     "q152_pxl_dns_query_summary" -> ((s, dir) =>
-      PxlRunner.runFunction(script(DnsQuerySummaryPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(DnsQuerySummaryPath), Pxl.env(s, dir, nowNs),
           "dns_queries", Seq("-45d", "", "", "", ""))
         .orderBy("pod", "dns_server", "qname")),
 
     // network_stats.pxl: raw select= projection + head over the -30s tail.
     "q153_pxl_network_stats_raw" -> ((s, dir) =>
-      PxlRunner.run(script(NetworkStatsPath),
+      PxlRunner.run(readRef(NetworkStatsPath),
           Pxl.env(s, dir, tailNow(s, dir)))("output")
         .orderBy("time_")),
 
@@ -59,7 +56,7 @@ object Pxl6 {
     // left-joined with the http LET summary. http_latency is the RAW
     // quantiles JSON — canonicalized to typed doubles (q145 convention).
     "q154_pxl_service_resource" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServiceResourcePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(ServiceResourcePath), Pxl.env(s, dir, nowNs),
           "services_for_cluster", Seq("-45d"))
         .withColumn("latency_p50",
           get_json_object(col("http_latency"), "$.p50").cast("double"))
@@ -71,21 +68,21 @@ object Pxl6 {
     // pod_memory_usage.pxl: two-level upid->pod memory rollup over the
     // -1m tail; spaced output column names.
     "q155_pxl_pod_memory" -> ((s, dir) =>
-      PxlRunner.run(script(PodMemoryPath),
+      PxlRunner.run(readRef(PodMemoryPath),
           Pxl.env(s, dir, tailNow(s, dir)))("output")
         .orderBy("pod", "timestamp")),
 
     // most_http_data.pxl: global-max agg self-merged back (get_max_elm)
     // onto the per-(pod, path) byte sums.
     "q156_pxl_most_http_data" -> ((s, dir) =>
-      PxlRunner.run(script(MostHttpPath),
+      PxlRunner.run(readRef(MostHttpPath),
           Pxl.env(s, dir, tailNow(s, dir)))("max_path_pod")
         .orderBy("pod", "req_path")),
 
     // largest_http_request.pxl: same max-row pattern at row level, then
     // the per-(pod, path, size) request count.
     "q157_pxl_largest_http" -> ((s, dir) =>
-      PxlRunner.run(script(LargestHttpPath),
+      PxlRunner.run(readRef(LargestHttpPath),
           Pxl.env(s, dir, tailNow(s, dir)))("number of reqs")
         .orderBy("pod", "req_path"))
   )

@@ -16,15 +16,12 @@ import Q._
   */
 object Pxl7 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val SqlQueriesPath = s"$RefPx/sql_queries/normed_sql_queries.pxl"
   val SqlQueryPath = s"$RefPx/sql_query/normed_sql_query.pxl"
   val JvmDataPath = s"$RefPx/jvm_data/stats.pxl"
   val AgentDiagPath = s"$RefPx/agent_status_diagnostics/agent_status.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -37,27 +34,27 @@ object Pxl7 {
     // sql_queries: normalize pgsql Query/Execute + mysql COM_QUERY/
     // COM_STMT_EXECUTE traffic, append, LET per (window, normed query).
     "q158_pxl_sql_queries" -> ((s, dir) =>
-      PxlRunner.runFunction(script(SqlQueriesPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(SqlQueriesPath), Pxl.env(s, dir, nowNs),
           "pod_sql_let", Seq("-45d", "pod"))
         .orderBy("time_", "normed_query")),
 
     // sql_query: the same pipeline grouped by (query, params) and
     // filtered to one normalized query.
     "q159_pxl_sql_query" -> ((s, dir) =>
-      PxlRunner.runFunction(script(SqlQueryPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(SqlQueryPath), Pxl.env(s, dir, nowNs),
           "pod_sql_let", Seq("-45d", "pod", "SELECT * FROM rel3 WHERE id=$1"))
         .orderBy("time_", "params")),
 
     // jvm_data: raw JVM heap viewer over the -1m tail with
     // upid_to_pid/cmdline scalars.
     "q160_pxl_jvm_data" -> ((s, dir) =>
-      PxlRunner.run(script(JvmDataPath),
+      PxlRunner.run(readRef(JvmDataPath),
           Pxl.env(s, dir, tailNow(s, dir)))("output")
         .orderBy("time_", "pid")),
 
     // agent_status_diagnostics: UDTF source with a bool arg + global agg.
     "q161_pxl_agent_diag" -> ((s, dir) =>
-      PxlRunner.run(script(AgentDiagPath), Pxl.env(s, dir, nowNs))("output"))
+      PxlRunner.run(readRef(AgentDiagPath), Pxl.env(s, dir, nowNs))("output"))
   )
 
   // ---- oracles -------------------------------------------------------

@@ -18,16 +18,13 @@ import Q._
   */
 object Pxl8 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val PodLifetimePath = s"$RefPx/pod_lifetime_resource/resource.pxl"
   val QualityPath = s"$RefPx/pixie_quality_metrics/pixie_quality_metrics.pxl"
   val PodEdgePath = s"$RefPx/pod_edge_stats/pod_edge_stats.pxl"
   val SvcEdgePath = s"$RefPx/service_edge_stats/service_edge_stats.pxl"
   val IpPath = s"$RefPx/ip/ip.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -40,18 +37,18 @@ object Pxl8 {
     // pod_lifetime_resource: whole-lifetime (not windowed) per-pod
     // resource totals with spaced display names.
     "q162_pxl_pod_lifetime" -> ((s, dir) =>
-      PxlRunner.run(script(PodLifetimePath),
+      PxlRunner.run(readRef(PodLifetimePath),
           Pxl.env(s, dir, tailNow(s, dir)))("output")
         .orderBy("pod_name")),
 
     // pixie_quality_metrics: latency sanity counters (huge/negative)
     // over http and mysql tracer tables.
     "q163_pxl_quality_http" -> ((s, dir) =>
-      PxlRunner.run(script(QualityPath),
+      PxlRunner.run(readRef(QualityPath),
           Pxl.env(s, dir, tailNow(s, dir)))("http_latencies")),
 
     "q164_pxl_quality_mysql" -> ((s, dir) =>
-      PxlRunner.run(script(QualityPath),
+      PxlRunner.run(readRef(QualityPath),
           Pxl.env(s, dir, tailNow(s, dir)))("mysql_latencies")),
 
     // pod_edge_stats: traffic between one (requesting, responding) pod
@@ -59,19 +56,19 @@ object Pxl8 {
     // latency_quantiles JSON column is dropped at the gate boundary —
     // its plucked p50/p90/p99 forms stay (q145 convention).
     "q165_pxl_pod_edge_let" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodEdgePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodEdgePath), Pxl.env(s, dir, nowNs),
           "pod_edge_let", Seq("-45d", "pod-7-gen1", "pod-7-gen1"))
         .drop("latency_quantiles")
         .orderBy("time_")),
 
     "q166_pxl_pod_edge_codes" -> ((s, dir) =>
-      PxlRunner.runFunction(script(PodEdgePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(PodEdgePath), Pxl.env(s, dir, nowNs),
           "http_code_agg", Seq("-45d", "pod-7-gen1", "pod-7-gen1"))
         .orderBy("resp_status")),
 
     // service_edge_stats: LET per (requestor svc, responder svc) edge.
     "q167_pxl_svc_edge_let" -> ((s, dir) =>
-      PxlRunner.runFunction(script(SvcEdgePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(SvcEdgePath), Pxl.env(s, dir, nowNs),
           "svc_edge_let", Seq("-45d", "svc-1", "svc-1"))
         .orderBy("time_", "latency_p50", "latency_p90", "latency_p99",
           "error_rate", "request_throughput", "bytes_throughput")),
@@ -79,17 +76,17 @@ object Pxl8 {
     // ip.pxl: all traffic involving one IP, rolled up per pod/role with
     // the scalar time-window rate conversion.
     "q168_pxl_ip_traffic" -> ((s, dir) =>
-      PxlRunner.runFunction(script(IpPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(IpPath), Pxl.env(s, dir, nowNs),
           "traffic_involving_ip", Seq("-45d", "10.9.7.7"))
         .orderBy("pod", "trace_role")),
 
     "q169_pxl_ip_pod_traffic" -> ((s, dir) =>
-      PxlRunner.runFunction(script(IpPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(IpPath), Pxl.env(s, dir, nowNs),
           "pod_traffic_to_ip", Seq("-45d", "10.9.7.7"))
         .orderBy("pod")),
 
     "q170_pxl_ip_flow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(IpPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(IpPath), Pxl.env(s, dir, nowNs),
           "net_flow_graph", Seq("-45d", "10.9.7.7"))
         .orderBy("requestor", "responder", "requestor_sent_bytes_per_s"))
   )

@@ -20,17 +20,14 @@ import Q._
   */
 object Pxl9 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
+  import Pxl.{RefPx, readRef}
+
   val HttpTraceIdPath = s"$RefPx/http_trace_id/script.pxl"
   val DiffFlamePath = s"$RefPx/differential_flamegraph/differential.pxl"
   val KafkaRebalPath =
     s"$RefPx/kafka_consumer_rebalancing/kafka_consumer_rebalancing.pxl"
   val KafkaPCLatencyPath =
     s"$RefPx/kafka_producer_consumer_latency/kafka_producer_consumer_latency.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
 
   private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
   private val startNs = nowNs - 45L * 86400L * 1000000000L
@@ -40,7 +37,7 @@ object Pxl9 {
     // http_trace_id: traceparent header pluck + \1-backreference regex
     // rewrite, linkified source/destination, full row-level trace.
     "q171_pxl_http_trace" -> ((s, dir) =>
-      PxlRunner.runFunction(script(HttpTraceIdPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(HttpTraceIdPath), Pxl.env(s, dir, nowNs),
           "http_trace_data", Seq("-45d", "traceparent", ""))
         .orderBy("time_")),
 
@@ -48,24 +45,24 @@ object Pxl9 {
     // with percent-of-target normalization (right join keeps the target
     // profile complete; missing baseline stacks yield null deltas).
     "q172_pxl_diff_flamegraph" -> ((s, dir) =>
-      PxlRunner.runFunction(script(DiffFlamePath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(DiffFlamePath), Pxl.env(s, dir, nowNs),
           "differential_flamegraph",
           Seq("-45d", "ns1", "pod-7-gen1", "pod-4-gen1"))
         .orderBy("stack_trace")),
 
     // kafka_consumer_rebalancing.
     "q173_pxl_kafka_rebal_data" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaRebalPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaRebalPath), Pxl.env(s, dir, nowNs),
           "kafka_join_sync_group_data", Seq("-45d"))
         .orderBy("time_")),
 
     "q174_pxl_kafka_rebal_delay" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaRebalPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaRebalPath), Pxl.env(s, dir, nowNs),
           "kafka_join_sync_delay", Seq("-45d", ""))
         .orderBy("time_", "member_id", "delay")),
 
     "q175_pxl_kafka_group_ids" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaRebalPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaRebalPath), Pxl.env(s, dir, nowNs),
           "kafka_group_ids", Seq("-45d"))
         .orderBy("group_id")),
 
@@ -75,12 +72,12 @@ object Pxl9 {
     // every produce event falls on the unresolved-remote rule since
     // 5 | 70, so its source/destination filter drops all rows).
     "q176_pxl_kafka_pc_consumers" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaPCLatencyPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaPCLatencyPath), Pxl.env(s, dir, nowNs),
           "kafka_consumers", Seq("-45d", "ns1", "t1"))
         .orderBy("consumer", "source")),
 
     "q177_pxl_kafka_pc_topics" -> ((s, dir) =>
-      PxlRunner.runFunction(script(KafkaPCLatencyPath), Pxl.env(s, dir, nowNs),
+      PxlRunner.runFunction(readRef(KafkaPCLatencyPath), Pxl.env(s, dir, nowNs),
           "kafka_topics", Seq("-45d", "ns1"))
         .orderBy("topic"))
   )

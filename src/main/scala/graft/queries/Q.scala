@@ -34,48 +34,6 @@ object Q {
   def qavg(c: Column): Column = qsum(c) / count(c)
   def qavgSql(x: String): String = s"(${qsumSql(x)}) / COUNT($x)"
 
-  /** Spread CPU-heavy per-row work across cores ONLY when the scan
-    * arrives under-parallel (the single-row-group fixture parquet scans
-    * as 1 partition). At 100 TB the scan is already thousands of
-    * partitions and an unconditional repartition would be a gratuitous
-    * full shuffle of the fact table — so this is a no-op there.
-    *
-    * The narrowness signal is STATIC — the source's on-disk size vs
-    * `spark.sql.files.maxPartitionBytes` (exactly how FilePartition
-    * packing decides the scan's parallelism) — instead of
-    * `df.rdd.getNumPartitions`, which would force an eager physical
-    * planning of the frame (plan built twice per query) and sidestep
-    * AQE. A directory-layout dataset (the normal large-data shape) is
-    * sized by summing its direct child files — a dirent stat would
-    * report ~4 KB and misclassify an arbitrarily large scan as narrow.
-    * An unstat-able path (object stores, globs) reports 0 bytes and
-    * conservatively leaves the frame alone.
-    */
-  def spreadIfNarrow(s: SparkSession, df: DataFrame, sourcePath: String): DataFrame =
-    if (narrowScan(s, sourcePath)) df.repartition(s.sparkContext.defaultParallelism)
-    else df
-
-  /** The narrowness signal of [[spreadIfNarrow]], exposed for callers
-    * that gate MORE than a repartition on it (e.g. the PxL protocol
-    * base's one-shot materialization): true iff the source's on-disk
-    * bytes pack into fewer scan splits than the session has cores.
-    * Always false at production scale — every gated transform is a
-    * structural no-op there.
-    */
-  def narrowScan(s: SparkSession, sourcePath: String): Boolean = {
-    val cores = s.sparkContext.defaultParallelism
-    val f = new java.io.File(sourcePath)
-    val bytes =
-      if (f.isDirectory)
-        Option(f.listFiles).map(_.iterator.filter(_.isFile).map(_.length).sum)
-          .getOrElse(0L)
-      else f.length
-    val maxPartBytes = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(s.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    val scanPartitions = math.max(1L, (bytes + maxPartBytes - 1) / maxPartBytes)
-    bytes > 0 && scanPartitions < cores
-  }
-
   /** Memoized logical-plan reuse for the synthesized protocol tables:
     * each is a wide projection over the fact scan whose ANALYSIS cost
     * (withColumn chains re-resolve the growing plan) was being re-paid

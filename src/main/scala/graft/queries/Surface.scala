@@ -29,8 +29,8 @@ object Surface {
     // Protocol decoders (funcs/protocols/*): every table, full domain
     // sweep including out-of-table codes exercising each default kind.
     "q40_protocols" -> ((s, dir) => {
-      val e = spreadIfNarrow(s, t(s, dir, "events").select(col("event_id")),
-        s"$dir/events.parquet")
+      val e = graft.core.Tables.spread(s,
+        t(s, dir, "events").select(col("event_id")), s"$dir/events.parquet")
       e.select(
         col("event_id"),
         ProtocolOps.protocolName.column(pmod(col("event_id"), lit(15))).as("proto"),
@@ -73,7 +73,7 @@ object Surface {
         lit(" gw fe80::1 mac aa:bb:cc:dd:ee:0f card 4111 2222 3333 "),
         (lit(4000) + pmod(col("event_id"), lit(1000))),
         lit(" ssn 123-45-6789 imei 490154203237518"))
-      spreadIfNarrow(s, t(s, dir, "events"), s"$dir/events.parquet")
+      graft.core.Tables.spread(s, t(s, dir, "events"), s"$dir/events.parquet")
         .select(col("event_id"), PiiOps.redactPii(txt).as("redacted"))
         .orderBy("event_id")
     }),

@@ -131,21 +131,22 @@ class PlanSpec extends AnyFunSuite {
       p.take(3000))
   }
 
-  test("spreadIfNarrow repartitions narrow scans only (no-op when parallel)") {
+  test("Tables.spread repartitions narrow scans of 48 KiB and more only") {
     val cores = spark.sparkContext.defaultParallelism
-    // fixture parquet arrives as 1 partition -> spread across cores; the
-    // narrowness signal is the file's on-disk size (static), NOT an eager
-    // .rdd materialization of the frame's physical plan
-    val narrow = graft.core.Tables(spark, dir, "events").select("event_id")
-    assert(narrow.rdd.getNumPartitions < cores)
-    val spread = graft.queries.Q.spreadIfNarrow(spark, narrow,
-      s"$dir/events.parquet")
+    // documents (64 KiB at sf0.001) arrives as 1 partition -> spread
+    // across cores; the narrowness signal is the file's on-disk size
+    // (static), NOT an eager .rdd materialization of the frame's plan
+    val docs = graft.core.Tables.plain(spark, dir, "documents")
+    assert(docs.rdd.getNumPartitions < cores)
+    val spread = graft.core.Tables.spread(spark, docs, s"$dir/documents.parquet")
     assert(spread.rdd.getNumPartitions == cores)
-    // a source too big to scan narrow (or un-stat-able: size 0) passes
-    // through with NO added exchange (at 100 TB every scan is already
-    // thousands of partitions)
+    // a file under 48 KiB stays single-task: the same frame, no exchange
+    val region = graft.core.Tables.plain(spark, dir, "region")
+    assert(graft.core.Tables.spread(spark, region, s"$dir/region.parquet") eq region)
+    // an un-stat-able source (size 0) passes through with NO added
+    // exchange (at 100 TB every scan is already thousands of partitions)
     val wide = spark.range(0, 10000, 1, cores).toDF("event_id")
-    val passthrough = graft.queries.Q.spreadIfNarrow(spark, wide,
+    val passthrough = graft.core.Tables.spread(spark, wide,
       "/nonexistent/source.parquet")
     assert(passthrough eq wide, "expected identity pass-through")
     assert(!plan(passthrough).contains("Exchange"), plan(passthrough).take(1000))

@@ -31,8 +31,7 @@ class PxlSpec extends AnyFunSuite {
   }
 
   test("verbatim http_request_stats/stats.pxl parses and executes") {
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(Pxl.StatsPxlPath)), "UTF-8")
+    val script = Pxl.readRef(Pxl.StatsPxlPath)
     assert(PxlParser.parse(script).nonEmpty)
     val now = graft.core.Tables(spark, dir, "events")
       .agg(max(col("ts"))).head().getLong(0) / 1000 * 1000 + 1000
@@ -40,6 +39,14 @@ class PxlSpec extends AnyFunSuite {
     assert(out.columns.toSeq == Seq("service", "latency(p50)", "latency(p90)",
       "latency(p99)", "errors", "throughput", "throughput total"))
     assert(out.count() >= 1)
+  }
+
+  test("a missing reference script raises one typed error naming its path and SPARK_GRAFT_REF_DIR") {
+    val rel = "no_such_ref_checkout/px/none.pxl"
+    val e = intercept[Pxl.MissingReference](Pxl.readRef(rel))
+    assert(e.getMessage.contains(new java.io.File(rel).getAbsolutePath), e.getMessage)
+    assert(e.getMessage.contains("SPARK_GRAFT_REF_DIR=" +
+      sys.env.getOrElse("SPARK_GRAFT_REF_DIR", "<unset>")), e.getMessage)
   }
 
   test("evaluator: filter, projection, head, ctx resolution, time window") {
@@ -102,13 +109,13 @@ class PxlSpec extends AnyFunSuite {
   }
 
   test("every bundled reference script parses (67/67 of pxl_scripts/px)") {
-    val root = java.nio.file.Paths.get(s"${Pxl.RefDir}/src/pxl_scripts/px")
+    val root = Pxl.refPath(Pxl.RefPx)
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".pxl")).toSeq
     assert(files.size == 67)
     val failures = files.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val src = Pxl.readRef(f.toString)
       try { PxlParser.parse(src); None }
       catch { case e: Throwable => Some(s"$f: ${e.getMessage}") }
     }
@@ -116,8 +123,7 @@ class PxlSpec extends AnyFunSuite {
   }
 
   test("def/return/exec_funcs: verbatim service_stats.pxl functions run") {
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(Pxl.ServiceStatsPxlPath)), "UTF-8")
+    val script = Pxl.readRef(Pxl.ServiceStatsPxlPath)
     val stmts = PxlParser.parse(script)
     assert(stmts.count(_.isInstanceOf[PxlParser.DefS]) == 14)
     val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
@@ -266,8 +272,7 @@ class PxlSpec extends AnyFunSuite {
     // shape instead.
     val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
     def run(path: String, fn: String, args: Seq[String]) = {
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
+      val src = Pxl.readRef(path)
       PxlRunner.runFunction(src, Pxl.env(spark, dir, now), fn, args)
     }
     val s1 = run(graft.queries.Pxl2.PodsPxlPath, "inbound_let_summary",
@@ -337,9 +342,7 @@ class PxlSpec extends AnyFunSuite {
   }
 
   test("UDTF sources bind: verbatim collect_agent_heaps runs end-to-end") {
-    val path = s"${Pxl.RefDir}/src/pxl_scripts/px/collect_agent_heaps/collect_agent_heaps.pxl"
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
+    val src = Pxl.readRef(graft.queries.Pxl15.HeapsPath)
     val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
     val out = PxlRunner.runFunction(src, Pxl.env(spark, dir, now),
       "collect_pprofs", Seq("1"))
@@ -352,8 +355,7 @@ class PxlSpec extends AnyFunSuite {
   }
 
   test("pod.pxl processes(): upid-keyed process list (binary upid — spec-gated)") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(graft.queries.Pxl2.PodPxlPath)), "UTF-8")
+    val src = Pxl.readRef(graft.queries.Pxl2.PodPxlPath)
     val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
     val out = PxlRunner.runFunction(src, Pxl.env(spark, dir, now),
       "processes", Seq("-45d", "pod-7-gen1"))
@@ -445,15 +447,13 @@ class PxlSpec extends AnyFunSuite {
   test("verbatim flow-graph scripts run end-to-end (shape checks)") {
     val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
     val net = PxlRunner.runFunction(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(graft.queries.Pxl4.NetFlowPath)), "UTF-8"),
+      Pxl.readRef(graft.queries.Pxl4.NetFlowPath),
       Pxl.env(spark, dir, now), "net_flow_graph", Seq("-45d", "ns1", "", "", "0"))
     assert(net.columns.toSeq == Seq("from_entity", "to_entity",
       "bytes_sent", "bytes_recv", "bytes_total"))
     assert(net.count() > 0)
     val mysql = PxlRunner.runFunction(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(graft.queries.Pxl4.MysqlFlowPath)), "UTF-8"),
+      Pxl.readRef(graft.queries.Pxl4.MysqlFlowPath),
       Pxl.env(spark, dir, now), "mysql_flow_graph", Seq("-45d", "ns1", "", ""))
     assert(mysql.columns.toSet == Set("source", "destination",
       "is_source_pod_type", "is_dest_pod_type", "namespace", "latency_p50",
@@ -526,17 +526,22 @@ class PxlSpec extends AnyFunSuite {
       s"fanout branches must not re-plan the scan->aggregate subtree:\n$forked")
     assert(res("x").count() > 0 && res("y").count() > 0)
     // The linear-chain scan-pushdown contract is a PRODUCTION-shape pin:
-    // at fixture scale the per-query events base (Pxl.env) is a
-    // checkpoint leaf by design, so pin the contract with the base
-    // disabled — the shape every plan takes when narrowScan is false.
-    spark.conf.set("spark.graft.pxlEventsBase", "0")
+    // where the events scan is narrow (Tables.narrow), the per-query
+    // events base (Pxl.env) is a checkpoint leaf by design. Splitting the
+    // file into `cores` scan partitions makes it not narrow at any
+    // fixture size, so the plan takes its production shape.
+    val k = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(k)
+    val evBytes = new java.io.File(s"$dir/events.parquet").length
+    spark.conf.set(k, math.max(1L, evBytes / spark.sparkContext.defaultParallelism))
     try {
+      assert(!graft.core.Tables.narrow(spark, s"$dir/events.parquet"))
       val res2 = PxlRunner.run(script, Pxl.env(spark, dir, now))
       val lin = res2("y").queryExecution.optimizedPlan.toString
       assert(lin.contains("parquet") &&
           !lin.contains("LogicalRDD") && !lin.contains("ExistingRDD"),
         s"linear param chain must stay a pushed-down scan:\n$lin")
-    } finally spark.conf.unset("spark.graft.pxlEventsBase")
+    } finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 

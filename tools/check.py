@@ -6,7 +6,8 @@ Reads each <outDir>/<name> parquet written by graft.Verify, runs the
 matching SQL from oracle_sql.json in DuckDB over the sfDir tables, and
 compares (rows, schema-by-name, sorted values). The names come from
 <outDir>/declared.json, which Verify writes before running anything, so a
-query that wrote no output counts as a failure."""
+query that wrote no output counts as a failure; when Verify's
+<outDir>/status.jsonl has a line for it, the failure names its error class."""
 import sys, json, glob, os
 import duckdb
 
@@ -26,9 +27,18 @@ else:
           file=sys.stderr)
     names = sorted(d for d in os.listdir(outdir)
                    if os.path.isdir(os.path.join(outdir, d)))
+status = {}
+if os.path.exists(f"{outdir}/status.jsonl"):
+    for line in open(f"{outdir}/status.jsonl"):
+        try:
+            rec = json.loads(line)
+        except ValueError:  # a line cut short by a killed run
+            continue
+        status[rec["name"]] = rec["status"]
 for name in names:
     if not os.path.isdir(os.path.join(outdir, name)):
-        print(f"FAIL {name}: not written"); fail += 1; continue
+        why = f" ({status[name]})" if name in status else ""
+        print(f"FAIL {name}: not written{why}"); fail += 1; continue
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
         print(f"FAIL {name}: no parquet written"); fail += 1; continue
